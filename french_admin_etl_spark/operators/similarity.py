@@ -55,9 +55,8 @@ def cosine(a: Column, b: Column) -> Column:
     undefined there, and under Spark 4's default ANSI mode a bare divide
     would raise DIVIDE_BY_ZERO and kill the WHOLE job on one all-zeros
     embedding — a padding row or failed embedding call becomes a poison
-    pill in every ANN path (review finding, reproduced). NULL scores
-    sort last under the descending top-k orderings, so zero-norm rows
-    simply never rank."""
+    pill in every ANN path (review finding, reproduced). :func:`_topk`
+    drops NULL scores before ranking, so zero-norm rows never rank."""
     denom = l2_norm(a) * l2_norm(b)
     return F.when(denom > 0, dot(a, b) / denom)
 
@@ -70,7 +69,12 @@ def _topk(scored: DataFrame, k: int, id_col: str, per_query: bool) -> DataFrame:
     within each q_id (one shuffle of the scored candidates, still
     corpus-scan dominated) for batched query frames. Review finding: the
     global limit over a multi-row query silently returned the UNION's
-    top-k, starving all but the densest query."""
+    top-k, starving all but the densest query.
+
+    NULL scores (zero-norm vectors, see :func:`cosine`) are dropped before
+    ranking: nulls-last ordering alone would still rank them whenever
+    fewer than k scored candidates exist."""
+    scored = scored.filter(F.col("cos_sim").isNotNull())
     if per_query:
         from pyspark.sql import Window
 

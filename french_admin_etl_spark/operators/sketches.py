@@ -51,6 +51,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from french_admin_etl_spark.session import local_frame
+
 _HASH_SPACE = 4294967296.0  # 2^32
 
 
@@ -164,7 +166,7 @@ def cms_query(
     cell). Never under-estimates the true frequency. The sketch is at
     most depth × width rows — broadcast to the probe side (only the
     non-preserved side of a left join can be broadcast)."""
-    probe = spark.createDataFrame([(v,) for v in values], "value string")
+    probe = local_frame(spark, [(v,) for v in values], "value string")
     rows = F.explode(F.array(*[F.lit(i) for i in range(depth)])).alias("row_id")
     addressed = probe.select("value", rows).select(
         "value", "row_id", _cms_cell(F.col("row_id"), F.col("value"), width).alias("cell")

@@ -11,8 +11,12 @@ coalesce/skew handling).
 from __future__ import annotations
 
 import os
+from collections.abc import Sequence
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 
 def get_spark(
@@ -67,3 +71,26 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(
+    spark: SparkSession, rows: Sequence[Sequence], schema: T.StructType | str
+) -> DataFrame:
+    """Frame over driver-local ``rows`` (tuples in ``schema`` order).
+
+    The rows travel as one Arrow table, so the frame is a ``LocalRelation``:
+    Catalyst folds projections over it on the driver, and ``collect()`` of
+    a projection starts no Spark job and no Python worker. A list passed
+    straight to ``createDataFrame`` instead becomes a pickled Python RDD
+    whose every action is a job through Python workers. The only
+    ``createDataFrame`` call in the package lives here.
+    """
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) if rows else [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)

@@ -36,7 +36,13 @@ def read_csv_stream_shaped(
     and the conf is read at EXECUTION time, so a set/restore scoped to this
     call would not stick. The trade: other CSV scans in the same session
     parse all columns even under projection. Parquet/JSON scans (the
-    engine's hot paths) are unaffected."""
+    engine's hot paths) are unaffected.
+
+    NOT FAULT-TOLERANT TO EXECUTOR LOSS (dead_letter=True): the one shared
+    parse is a ``localCheckpoint``, whose blocks live only on the executors
+    that computed them and are not replicated. If such an executor is lost,
+    every later action on ``good`` or ``bad`` fails instead of recomputing
+    from the CSV; call this function again to rebuild the split."""
     if spark.conf.get("spark.sql.csv.parser.columnPruning.enabled", "true") != "false":
         spark.conf.set("spark.sql.csv.parser.columnPruning.enabled", "false")
     if not dead_letter:
@@ -63,7 +69,8 @@ def read_csv_stream_shaped(
         # leaked one cached copy of the parsed file until session end
         # (review finding). localCheckpoint blocks are ContextCleaner-
         # tracked — reclaimed when the frames are garbage-collected (the
-        # same fix as the LSH banded cache, round-5 session 7).
+        # same fix as the LSH banded cache, round-5 session 7). The blocks
+        # are not replicated: see the executor-loss note in the docstring.
         .localCheckpoint(eager=False)
     )
     good = df.filter(F.col("_corrupt_record").isNull()).drop("_corrupt_record")

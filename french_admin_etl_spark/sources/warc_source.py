@@ -87,31 +87,33 @@ def _gzip_chunks(data: bytes, chunk: int = 1 << 20) -> Iterator[bytes]:
     pending = b""  # fed-but-unconsumed input (always < chunk window)
     while pending or pos < n:
         d = zlib.decompressobj(wbits=31)
-        consumed = 0
+        fed = len(pending)  # input bytes handed to this member so far
         while True:
             if not pending:
                 if pos >= n:
                     raise ValueError("truncated gzip member in WARC")
                 pending = bytes(view[pos : pos + chunk])
                 pos += len(pending)
-            before = len(pending)
-            piece = d.decompress(pending, chunk)
+                fed += len(pending)
+            try:
+                piece = d.decompress(pending, chunk)
+            except zlib.error as e:
+                raise ValueError(f"corrupt gzip member in WARC: {e}") from e
             pending = d.unconsumed_tail
-            consumed += before - len(pending)
             if piece:
                 yield piece
             if d.eof:
                 break
+        # post-member bytes within the fed window start the next member.
+        # At eof they are all in unused_data; unconsumed_tail may repeat
+        # them when an earlier call hit the output cap, and flush() would
+        # append that tail to unused_data again — so read it first
+        pending = d.unused_data
+        if fed - len(pending) <= 0:
+            raise ValueError("gzip member consumed no input")
         tail = d.flush()
         if tail:
             yield tail
-        # post-member bytes within the fed window start the next member
-        # (unconsumed_tail is empty once eof is reached)
-        leftover = d.unused_data + pending
-        consumed -= len(d.unused_data)
-        if consumed <= 0:
-            raise ValueError("gzip member consumed no input")
-        pending = leftover
 
 
 def _dechunk(body: bytes) -> bytes:

@@ -68,6 +68,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.observation import Observation
 
+from french_admin_etl_spark.session import local_frame
+
 INTERNAL_COLS = ["_lsn", "_deleted"]
 _WIDEN_OK = {("int", "bigint"), ("smallint", "int"), ("smallint", "bigint"), ("float", "double")}
 
@@ -463,7 +465,7 @@ class LakeTable:
                 .withColumn("_coal", F.lit(coal))
             )
         if not parts:
-            return self.spark.createDataFrame([], phys_cur)
+            return local_frame(self.spark, [], phys_cur)
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p, allowMissingColumns=True)
@@ -573,10 +575,14 @@ class LakeTable:
         any I/O, the pushed key predicate prunes row groups via parquet
         min/max stats (tight after ``optimize_sort``), and only then do
         surviving rows hit the (possibly MOR-resolving) read path. The
-        bucket set comes from one k-row job running the WRITER'S OWN hash
-        expression (no reimplementation that could drift from xxhash64's
-        exact semantics); the key predicate pushes through the resolution
-        aggregate because it filters grouping columns.
+        bucket set comes from the WRITER'S OWN hash expression (no
+        reimplementation that could drift from xxhash64's exact semantics)
+        evaluated over the k key tuples as a driver-local Arrow
+        ``LocalRelation``: Catalyst folds the projection on the driver, so
+        the probe starts no Spark job and no Python worker, and building
+        the lookup frame runs no job at all. The key predicate pushes
+        through the resolution aggregate because it filters grouping
+        columns.
 
         Between bucket pruning and the pushed predicate sits manifest
         pruning: files whose recorded key min/max ranges exclude every
@@ -598,22 +604,17 @@ class LakeTable:
         manifest)."""
         snap = self.snapshot()
         keys, nb = snap["key_cols"], snap["num_buckets"]
+        schema = T.StructType.fromJson(snap["schemas"][str(snap["schema_version"])])
         if not key_values:
-            return self.read().limit(0)
+            return local_frame(self.spark, [], schema)
         # key schema must use the TABLE'S OWN types: xxhash64 of bigint 5
         # and of string '5' bucket differently — a hardcoded string schema
         # silently scans the wrong bucket (review repro on bigint keys)
-        fields = {
-            f["name"]: f["type"]
-            for f in snap["schemas"][str(snap["schema_version"])]["fields"]
-        }
-        key_schema = T.StructType(
-            [T.StructField(k, _parse_type_json(fields[k]), True) for k in keys]
-        )
-        one = self.spark.createDataFrame(key_values, key_schema)
+        key_schema = T.StructType([T.StructField(k, schema[k].dataType, True) for k in keys])
+        one = local_frame(self.spark, key_values, key_schema)
         # buckets (and, when the table keeps blooms, the probe's bloom
-        # positions) computed driver-side from the same hash expressions
-        # the writer used — one k-row job serves both
+        # positions) computed on the driver from the same hash expressions
+        # the writer used — one projection over the local frame serves both
         bbits, bk = _bloom_config(snap["properties"])
         probe_cols = [_bucket_expr(keys, nb).alias("_b")]
         if bbits:
@@ -637,7 +638,6 @@ class LakeTable:
                     all((ba[p // 8] >> (p % 8)) & 1 for p in ps)
                     for ps in pos_by_bucket.get(g["bucket"], [])
                 )
-        logical = [f["name"] for f in snap["schemas"][str(snap["schema_version"])]["fields"]]
         pred = None
         for kv in key_values:
             clause = None
@@ -670,7 +670,7 @@ class LakeTable:
             )
             .filter(pred)
             .filter(~F.col("_deleted"))
-            .select(*logical)
+            .select(*schema.fieldNames())
         )
 
     def scan_range(self, col: str, lo=None, hi=None, version: int | None = None) -> DataFrame:
@@ -927,7 +927,7 @@ class LakeTable:
         logical = [f["name"] for f in snap["schemas"][str(cur_v)]["fields"]]
         if not in_window:
             phys = self._schema_at(snap, cur_v)
-            empty = self.spark.createDataFrame([], phys)
+            empty = local_frame(self.spark, [], phys)
             return empty.withColumn("_commit_version", F.lit(None).cast("long")).select(
                 *logical, "_lsn", "_deleted", "_commit_version"
             )
@@ -2183,7 +2183,8 @@ class LakeTable:
             )
             for s in self.history()
         ]
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             rows,
             "version long, parent long, schema_version int, num_buckets int, "
             "file_groups int, files int, rows long, delta_groups int, properties string",
@@ -2215,7 +2216,8 @@ class LakeTable:
                         json.dumps(s, sort_keys=True) if s else None,
                     )
                 )
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             rows,
             "bucket int, file string, schema_version int, seq long, "
             "delta boolean, coalesce boolean, layout string, stats string",

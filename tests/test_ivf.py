@@ -176,3 +176,21 @@ def test_per_query_topk_multi_row_query(spark):
         # each query's neighbors come from its own cluster
         assert all(v < 100 for v in per_q[0]), (fn.__name__, per_q)
         assert all(v >= 100 for v in per_q[1]), (fn.__name__, per_q)
+
+
+def test_topk_drops_zero_norm_rows(spark):
+    """A zero-norm vector scores NULL; with fewer than k scored
+    candidates, nulls-last ordering alone would still rank it. Both
+    top-k branches must leave NULL scores out."""
+    corpus = spark.createDataFrame(
+        [(1, [0.0, 0.0]), (2, [1.0, 0.0]), (3, [0.8, 0.6])],
+        "vec_id long, embedding array<float>",
+    )
+    q = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [0.0, 0.0])], "q_id long, q_emb array<float>"
+    )
+    one = cosine_topk(corpus, q.filter("q_id = 0"), k=5).collect()
+    assert [r["vec_id"] for r in one] == [2, 3]
+    rows = cosine_topk(corpus, q, k=5, per_query=True).collect()
+    assert sorted((r["q_id"], r["vec_id"]) for r in rows) == [(0, 2), (0, 3)]
+    assert all(r["cos_sim"] is not None for r in one + rows)

@@ -361,18 +361,62 @@ def test_lookup_non_string_keys(spark, tmp_root):
     """Review repro regression: a bigint-keyed table must hash the key
     with ITS OWN type — a hardcoded string schema buckets '5' differently
     from 5 and silently returns nothing for present keys."""
+    import datetime as _dt
     import os as _os
 
-    st = T.StructType([T.StructField("id", T.LongType()), T.StructField("v", T.StringType())])
-    t = LakeTable.create(
-        spark, _os.path.join(tmp_root, "lkint"), schema=st, key_cols=["id"], num_buckets=8
-    )
-    src = spark.createDataFrame(
-        [(i, f"v{i}", i, "I") for i in range(1, 30)], "id long, v string, lsn long, op string"
-    )
-    t.merge(src, batch_id=0)
-    got = {r["id"]: r["v"] for r in t.lookup([(5,), (17,), (999,)]).collect()}
-    assert got == {5: "v5", 17: "v17"}
+    day = _dt.date(2024, 1, 1)
+    # each key type's probe row goes through the Arrow type mapping before
+    # the writer's hash sees it: a drifting mapping misses present keys
+    for name, typ, key in (
+        ("long", T.LongType(), lambda i: i),
+        ("int", T.IntegerType(), lambda i: i),
+        ("date", T.DateType(), lambda i: day + _dt.timedelta(days=i)),
+    ):
+        st = T.StructType([T.StructField("id", typ), T.StructField("v", T.StringType())])
+        t = LakeTable.create(
+            spark, _os.path.join(tmp_root, f"lk{name}"), schema=st, key_cols=["id"],
+            num_buckets=8,
+        )
+        src = spark.createDataFrame(
+            [(key(i), f"v{i}", i, "I") for i in range(1, 30)],
+            T.StructType(
+                list(st.fields)
+                + [T.StructField("lsn", T.LongType()), T.StructField("op", T.StringType())]
+            ),
+        )
+        t.merge(src, batch_id=0)
+        got = {r["id"]: r["v"] for r in t.lookup([(key(5),), (key(17),), (key(999),)]).collect()}
+        assert got == {key(5): "v5", key(17): "v17"}, name
+
+
+def test_lookup_builds_frame_without_spark_jobs(spark, tmp_root):
+    """Building a lookup frame runs no Spark job: the bucket (and bloom)
+    probe is a projection over a driver-local Arrow frame, which Catalyst
+    folds on the driver. Only actions on the returned frame start jobs."""
+    import os as _os
+
+    sc = spark.sparkContext
+    rows = [(i, "I", f"r{i % 5}", f"p{i:03d}", f"c{i}") for i in range(40)]
+    for props in ({}, {"bloom.bits": 1024, "bloom.hashes": 3}):
+        t = LakeTable.create(
+            spark, _os.path.join(tmp_root, f"zj{len(props)}"), SCHEMA, ["repo", "path"],
+            num_buckets=8, write_mode="mor", properties=props,
+        )
+        t.merge(_src(spark, rows[:20]), batch_id=0)
+        t.merge(_src(spark, rows[20:]), batch_id=1)
+        keys = [("r1", "p001"), ("r2", "p022"), ("rX", "pX")]
+        group = f"lookup-zero-jobs-{len(props)}"
+        sc.setJobGroup(group, group)
+        try:
+            out = t.lookup(keys)
+            # the status store is fed asynchronously: drain it before asking
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            assert list(sc.statusTracker().getJobIdsForGroup(group)) == [], props
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        got = {(r["repo"], r["path"]): r["content"] for r in out.collect()}
+        assert got == {("r1", "p001"): "c1", ("r2", "p022"): "c22"}, props
 
 
 def test_lookup_manifest_stats_skip_files(spark, tmp_root):

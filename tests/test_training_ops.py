@@ -1874,9 +1874,9 @@ def test_ansi_poison_rows_zero_norm_short_vector_emoji(spark):
     query = spark.createDataFrame([(9, [1.0, 0.0])], "q_id long, q_emb array<float>")
     got = cosine_topk(corpus, query, k=3).collect()
     by_id = {r["vec_id"]: r["cos_sim"] for r in got}
-    assert by_id[1] is None  # zero-norm: NULL score, never a crash
+    # zero-norm: NULL score, never a crash, and never ranked into the top-k
+    assert 1 not in by_id
     assert abs(by_id[2] - 1.0) < 1e-9
-    # NULL sorts last under the desc ordering: top-1 is the exact match
     assert got[0]["vec_id"] == 2
 
     short = spark.createDataFrame(

@@ -370,6 +370,33 @@ def test_gzip_chunks_windowed_input_members_straddle_windows():
         list(_gzip_chunks(archive[:-7], chunk=1000))
 
 
+def test_gzip_chunks_corrupt_member_raises_value_error():
+    """A corrupt, non-truncated member after a valid one makes zlib raise
+    ``zlib.error``; the documented contract is ``ValueError``, with the
+    valid member's output yielded before the raise. The valid member
+    decodes to more than one output chunk and ends mid-window, the state
+    in which zlib repeats the bytes after it in both ``unconsumed_tail``
+    and ``unused_data``: a following member must still start exactly
+    once."""
+    import gzip as _gzip
+
+    import pytest as _pytest
+
+    from french_admin_etl_spark.sources.warc_source import _gzip_chunks
+
+    good = b"intact member " * 50
+    nxt = b"next member"
+    assert b"".join(_gzip_chunks(_gzip.compress(good) + _gzip.compress(nxt), chunk=64)) == (
+        good + nxt
+    )
+    archive = _gzip.compress(good) + b"\x00not a gzip member at all" * 8
+    out = []
+    with _pytest.raises(ValueError, match="corrupt gzip member"):
+        for piece in _gzip_chunks(archive, chunk=64):
+            out.append(piece)
+    assert b"".join(out) == good
+
+
 def test_http_gzip_cap_exact_boundary_not_unlimited(monkeypatch):
     """Review finding: when decoded output reached EXACTLY the cap,
     max_length=0 was passed to zlib — which means UNLIMITED — so a
