@@ -2279,7 +2279,7 @@ def oracle_sql() -> dict[str, str]:
             FROM e
             GROUP BY 1, 2
         """,
-        "t12_dedup_lines": """
+        "t12_dedup_lines": r"""
             WITH ml0 AS (
               SELECT doc_id, regexp_replace(text, '\. ', '.' || chr(10), 'g') AS t
               FROM documents

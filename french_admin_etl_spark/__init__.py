@@ -9,14 +9,16 @@ exactly-once MERGE upserts into snapshot-isolated lake tables:
 - ``table``      snapshot-based lake table (bucketed parquet + JSON metadata
                  log, atomic commit, MERGE INTO, schema evolution, fencing)
 - ``operators``  dedup (max-LSN), allow-list filters, validate-and-split,
-                 long->wide pivot, hot-key salting
-- ``functions``  vectorized hashing (sha256 pandas UDF), normalization casts
+                 long->wide pivot, hot-key salting; training-data ops
+                 (``textdedup``: exact/minhash/simhash dedup,
+                 ``similarity``: similarity search) and media blobs
+                 (``multimodal``: metadata without decode, library-free
+                 image decode + thumbnail features)
+- ``functions``  vectorized hashing (sha256 pandas UDF), normalization
+                 casts, text quality and language-id
 - ``sources``    CSV / nested-JSON / change-event-log readers
 - ``streaming``  micro-batch apply loop, checkpointing, lineage & metrics
 - ``plans``      versioned schema registry (the reference's migration analog)
-- ``textops``    training-data ops: dedup (exact/minhash/simhash), text
-                 quality, language-id, similarity search
-- ``multimodal`` binary-column (image/audio) plumbing with stubbed decoders
 """
 
 __version__ = "0.1.0"

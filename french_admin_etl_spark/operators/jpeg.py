@@ -1494,12 +1494,11 @@ def decode_jpeg_gray(payload: bytes):
 
     This wrapper is the [0, 255] GRAY-CONTRACT boundary: frames coded at
     precision ≠ 8 (12-bit SOF1/SOF2, 2–16-bit lossless SOF3) rescale by
-    255/(2^P − 1) so downstream feature code (thumbnails divide by 255,
-    video frame sampling casts to uint8) sees the same range every other
-    decoder produces. ``decode_jpeg`` itself stays in native range for
-    bit-exact round-trips (round-5 review finding: 12-bit frames leaked
-    [0, 4095] into thumbnail features and wrapped modulo 256 in frame
-    hashes)."""
+    255/(2^P − 1) so downstream feature code (thumbnails divide by 255)
+    sees the same range every other decoder produces. ``decode_jpeg``
+    itself stays in native range for bit-exact round-trips (round-5
+    review finding: 12-bit frames leaked [0, 4095] into thumbnail
+    features)."""
     w, h, planes, prec = decode_jpeg(payload, with_precision=True)
     gray = planes[0]
     if prec != 8:

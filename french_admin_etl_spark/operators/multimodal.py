@@ -1,55 +1,26 @@
-"""Multimodal column plumbing: image/audio/video as opaque binary columns
-with typed metadata, processed via Arrow-batched ``mapInPandas``.
+"""Multimodal column plumbing: media rows as opaque binary columns with
+typed metadata, images featurized via Arrow-batched ``mapInPandas``.
 
-The Spark-side machinery here is REAL and tested — schemas, batch
-iteration, partitioning, UDF signatures. Decode status, honestly
-delineated (this container has no PIL/ffmpeg):
+- ``media_metadata`` reads a media table without decoding any payload:
+  every output column is a JVM expression (byte length, magic-prefix
+  hex, content hash), so it runs at scan speed and the blob never
+  reaches Python.
+- ``extract_image_features`` decodes image payloads with no image
+  library: PPM/PGM/PNM, BMP (incl. palette and RLE), ICO, PNG (all
+  filters, depths, palette, Adam7), GIF (from-scratch LZW, interlace),
+  TGA (``operators/tga.py``), TIFF (``operators/tiff.py``) and every
+  T.81 JPEG coding process (``operators/jpeg.py``). The feature is a
+  real nearest-neighbour 8x8 grayscale thumbnail. A row whose codec is
+  unsupported or whose payload is corrupt gets a per-row ``err`` instead
+  of failing the batch (the engine's S9 dead-letter rule applied to
+  media). ``decode_stub=True`` swaps in a deterministic fake decode so
+  the pipeline shape is exercised without fixtures.
 
-- **REAL decode, no libraries needed**: uncompressed raster images
-  (PPM ``P6`` / PGM ``P5`` headers + numpy reshape; 24-bit uncompressed
-  ``BM`` bitmaps incl. bottom-up row order and 4-byte row padding),
-  **PNG** (stdlib ``zlib`` inflate + all five scanline filters, 8-bit
-  gray/RGB/GA/RGBA non-interlaced), **GIF** (from-scratch variable-width
-  LZW with dictionary growth / deferred clear / KwKwK, global+local
-  color tables, 4-pass interlace; round 5 closed this seam),
-  **baseline AND progressive JPEG**
-  (from-scratch Huffman + dequant + IDCT in ``operators/jpeg.py``:
-  SOF0/SOF1/SOF2, any chroma sampling, restart markers, multi-scan
-  non-interleaved files, spectral selection + successive approximation;
-  round-trip tested against from-scratch sequential AND progressive
-  encoders — round 4 closed the progressive seam), PCM WAV audio
-  (stdlib ``wave``), and **IMA ADPCM compressed WAV** (from-scratch
-  4-bit differential decode, mono+stereo, bit-exact round-trip — round 5
-  closed this seam), the full WAV tag family (8/24/32-bit PCM, IEEE
-  float, G.711 A-law/µ-law, MS ADPCM, extensible headers — round 5),
-  plus
-  LOSSLESS (SOF3 predictor DPCM), 12-BIT
-  extended-sequential/progressive, ARITHMETIC (SOF9/10/11 via the
-  from-scratch QM coder) and HIERARCHICAL (annex J) JPEG — every T.81
-  coding process (all round 5).
-  Real nearest-neighbor RESIZE to an 8×8 grayscale
-  thumbnail is the image feature; per-segment RMS energy is the audio
-  feature. FLAC audio decodes via the from-scratch rice/LPC decoder
-  (operators/flac.py). Rows whose codec still needs an external library
-  (MP3, non-MJPEG compressed video/…) get a per-row ``err``
-  instead of failing the batch — the engine's S9 dead-letter philosophy
-  applied to media.
-- **STUBBED**: compressed codecs and video frame iteration
-  (``decode_stub=True`` swaps in a deterministic fake so the pipeline
-  shape is exercised end-to-end; the real-video seam raises
-  ``NotImplementedError`` exactly where ffmpeg/pyav would plug in).
-
-Design for 100 TB of media:
-- Binary payloads never leave the executor: ``mapInPandas`` streams Arrow
-  record batches, so a 10 MB image is one cell in one batch, not a row
-  copied through the driver.
-- ``spark.sql.files.maxPartitionBytes`` (not row count) governs task
-  sizing — media tables have huge rows, so fewer rows per task is
-  automatic.
-- Feature extraction emits SMALL fixed-width columns (dims, hash,
-  features); downstream joins/dedup operate on those, never re-reading
-  the blob — write features to their own table/column family so the scan
-  for analytics prunes the blob column entirely (columnar projection).
+Binary payloads never leave the executor: ``mapInPandas`` streams Arrow
+record batches, so a 10 MB image is one cell in one batch, not a row
+copied through the driver. Feature extraction emits small fixed-width
+columns (dims, hash, feature); downstream joins/dedup read those, never
+the blob.
 """
 
 from __future__ import annotations
@@ -80,18 +51,6 @@ IMAGE_FEATURES_SCHEMA = T.StructType(
         T.StructField("width", T.IntegerType(), True),
         T.StructField("height", T.IntegerType(), True),
         T.StructField("feature", T.ArrayType(T.FloatType()), True),
-        T.StructField("err", T.StringType(), True),
-    ]
-)
-
-AUDIO_FEATURES_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("n_channels", T.IntegerType(), True),
-        T.StructField("sample_rate", T.IntegerType(), True),
-        T.StructField("n_frames", T.LongType(), True),
-        T.StructField("duration_sec", T.DoubleType(), True),
-        T.StructField("rms_segments", T.ArrayType(T.FloatType()), True),
         T.StructField("err", T.StringType(), True),
     ]
 )
@@ -496,13 +455,9 @@ def _png_raster(
 
 
 def _png_chunk_iter(payload: bytes):
-    """Yield (type, data) per PNG chunk, stopping at IEND. ONE walk shared
-    by the still decoder and the APNG frame iterator (review finding: two
-    copies with DIFFERENT truncation behavior made the same payload decode
-    as an image but error as a video). A truncated trailing chunk yields
-    its partial data and ends the walk — lenient like the still decoder
-    has always been (it only needs IHDR + IDAT); consumers needing exact
-    sizes (fcTL/fdAT headers, zlib streams) validate their own payloads."""
+    """Yield (type, data) per PNG chunk, stopping at IEND. A truncated
+    trailing chunk yields its partial data and ends the walk — lenient,
+    since the decoder only needs IHDR + IDAT."""
     pos, n = 8, len(payload)
     while pos + 8 <= n:
         ln = int.from_bytes(payload[pos : pos + 4], "big")
@@ -643,11 +598,7 @@ def _gif_read_frame(payload: bytes, pos: int, gct, np):
     sub-blocks, de-interlace, palette bounds check. Returns
     ``(left, top, w, h, ct, rows, next_pos)`` with ``rows`` the (h, w)
     uint8 palette-index array in display order and ``next_pos`` just past
-    the block terminator. ONE implementation of the wire format, shared
-    by the still-image branch (:func:`_decode_gif_inner`) and the
-    animation iterator (``video._iter_gif``) — a fix to the interlace
-    lattice, the bounds check, or the sub-block walk lands in both
-    (round-5 review finding: the ~40 lines were duplicated)."""
+    the block terminator."""
     left = int.from_bytes(payload[pos + 1 : pos + 3], "little")
     top = int.from_bytes(payload[pos + 3 : pos + 5], "little")
     w = int.from_bytes(payload[pos + 5 : pos + 7], "little")
@@ -800,531 +751,6 @@ def extract_image_features(
     return imgs.mapInPandas(process, schema=IMAGE_FEATURES_SCHEMA)
 
 
-# IMA/DVI ADPCM tables (IMA Recommended Practices rev 1.06 / RFC 3551
-# §4.5.1 G.726-family step adaptation)
-_IMA_STEP_TABLE = (
-    7, 8, 9, 10, 11, 12, 13, 14, 16, 17, 19, 21, 23, 25, 28, 31, 34, 37,
-    41, 45, 50, 55, 60, 66, 73, 80, 88, 97, 107, 118, 130, 143, 157, 173,
-    190, 209, 230, 253, 279, 307, 337, 371, 408, 449, 494, 544, 598, 658,
-    724, 796, 876, 963, 1060, 1166, 1282, 1411, 1552, 1707, 1878, 2066,
-    2272, 2499, 2749, 3024, 3327, 3660, 4026, 4428, 4871, 5358, 5894,
-    6484, 7132, 7845, 8630, 9493, 10442, 11487, 12635, 13899, 15289,
-    16818, 18500, 20350, 22385, 24623, 27086, 29794, 32767,
-)
-_IMA_INDEX_TABLE = (-1, -1, -1, -1, 2, 4, 6, 8, -1, -1, -1, -1, 2, 4, 6, 8)
-
-
-def _g711_table(alaw: bool):
-    """G.711 code → float64 [-1, 1) expansion table (256 entries), shared
-    by the WAV (tags 6/7), AIFF (``ulaw``/``alaw``) and AU (encodings
-    1/27) paths.
-
-    - A-law: toggle the even bits, segment-expand; the sign bit SET means
-      POSITIVE (0xD5 → +8, 0x55 → −8).
-    - µ-law: complement, biased segment-expand; the sign bit of the
-      COMPLEMENT set means NEGATIVE (0xFF → 0, 0x00 → −32124)."""
-    import numpy as np
-
-    codes = np.arange(256, dtype=np.int64)
-    if alaw:
-        c = codes ^ 0x55
-        sign = (c & 0x80) != 0
-        exp = (c >> 4) & 0x07
-        mant = c & 0x0F
-        mag = np.where(exp == 0, (mant << 4) + 8, ((mant << 4) + 0x108) << np.maximum(exp - 1, 0))
-        return np.where(sign, mag, -mag).astype(np.float64) / 32768.0
-    c = ~codes & 0xFF
-    sign = (c & 0x80) != 0
-    exp = (c >> 4) & 0x07
-    mant = c & 0x0F
-    mag = (((mant << 3) + 0x84) << exp) - 0x84
-    return np.where(sign, -mag, mag).astype(np.float64) / 32768.0
-
-
-def _pcm_be(data: bytes, bits: int):
-    """Big-endian signed PCM → float64 in [-1, 1) (AIFF/AU sample path;
-    the WAV decoder keeps its little-endian twin inline)."""
-    import numpy as np
-
-    if bits == 8:  # AIFF 'twos'/AU: 8-bit linear is SIGNED
-        return np.frombuffer(data, np.int8).astype(np.float64) / 128.0
-    if bits == 16:
-        return np.frombuffer(data, ">i2", count=len(data) // 2).astype(np.float64) / 32768.0
-    if bits == 24:
-        n = len(data) // 3
-        b = np.frombuffer(data, np.uint8, count=n * 3).reshape(n, 3).astype(np.int64)
-        v = (b[:, 0] << 16) | (b[:, 1] << 8) | b[:, 2]
-        v = np.where(v >= 1 << 23, v - (1 << 24), v)
-        return v.astype(np.float64) / float(1 << 23)
-    if bits == 32:
-        return np.frombuffer(data, ">i4", count=len(data) // 4).astype(np.float64) / float(1 << 31)
-    raise ValueError(f"PCM width {bits} unsupported")
-
-
-def _decode_au(payload: bytes):
-    """REAL Sun/NeXT AU (``.snd``) decode (round 5) — the classic
-    big-endian telephony container. Header: magic, data offset, data
-    size (0xFFFFFFFF = unknown → rest of file), encoding, sample rate,
-    channels, all u32 BE. Encodings: 1 µ-law, 2-5 linear PCM
-    (8/16/24/32-bit signed BE), 6/7 IEEE float BE, 27 A-law — the
-    formulaic set; ADPCM variants raise (S9 upstream). Returns the
-    (nch, rate, n_frames, mono float64) shape the WAV decoders share."""
-    import numpy as np
-
-    if payload[:4] != b".snd" or len(payload) < 24:
-        raise ValueError("not an AU file")
-    off = int.from_bytes(payload[4:8], "big")
-    size = int.from_bytes(payload[8:12], "big")
-    enc = int.from_bytes(payload[12:16], "big")
-    rate = int.from_bytes(payload[16:20], "big")
-    nch = int.from_bytes(payload[20:24], "big")
-    if off < 24 or off > len(payload):
-        raise ValueError(f"AU data offset {off} out of range")
-    # upper bound: the header field is u32, but a rate past int32 crashes
-    # the WHOLE Arrow batch at the IntegerType sample_rate column instead
-    # of dead-lettering this row (S9; review finding) — and no real audio
-    # approaches 2^31 Hz, so reject as malformed here
-    if nch < 1 or rate < 1 or rate > 0x7FFFFFFF:
-        raise ValueError(f"AU channels={nch} rate={rate} malformed")
-    data = payload[off:] if size == 0xFFFFFFFF else payload[off : off + size]
-    if enc == 1:
-        x = _g711_table(alaw=False)[np.frombuffer(data, np.uint8)]
-    elif enc in (2, 3, 4, 5):
-        x = _pcm_be(data, 8 * (enc - 1))
-    elif enc == 6:
-        x = np.frombuffer(data, ">f4", count=len(data) // 4).astype(np.float64)
-    elif enc == 7:
-        x = np.frombuffer(data, ">f8", count=len(data) // 8).astype(np.float64)
-    elif enc == 27:
-        x = _g711_table(alaw=True)[np.frombuffer(data, np.uint8)]
-    else:
-        raise ValueError(f"AU encoding {enc} unsupported")
-    n = len(x) // nch
-    if n == 0:
-        raise ValueError("AU data holds no complete frame")
-    return nch, rate, n, x[: n * nch].reshape(n, nch).mean(axis=1)
-
-
-def _f80(b: bytes) -> float:
-    """IEEE 754 80-bit extended float (AIFF's sample-rate field): sign(1)
-    + biased exponent(15) + mantissa(64, integer bit EXPLICIT) — value =
-    ±m · 2^(e − 16383 − 63)."""
-    if len(b) < 10:
-        raise ValueError("truncated 80-bit float")
-    e = int.from_bytes(b[0:2], "big")
-    m = int.from_bytes(b[2:10], "big")
-    sign = -1.0 if e & 0x8000 else 1.0
-    e &= 0x7FFF
-    if e == 0 and m == 0:
-        return 0.0
-    if e == 0x7FFF:
-        raise ValueError("AIFF sample rate is inf/nan")
-    return sign * m * 2.0 ** (e - 16383 - 63)
-
-
-def _decode_aiff(payload: bytes):
-    """REAL AIFF / AIFF-C decode (round 5), stdlib+numpy only (the stdlib
-    ``aifc`` module was removed in Python 3.13): big-endian IFF chunk
-    walk, COMM (channels, frame count, bits, 80-bit extended sample
-    rate, AIFC compression fourcc), SSND (offset/blockSize preamble).
-    Compression types NONE/``twos`` (BE PCM 8/16/24/32), ``sowt`` (the
-    little-endian 16-bit variant Apple emits), ``fl32``/``fl64`` (IEEE
-    float), ``ulaw``/``alaw`` (G.711), ``raw `` (unsigned 8-bit) — the
-    formulaic set; compressed AIFC codecs (ima4, MACE, GSM) raise per
-    row (S9). Returns (nch, rate, n_frames, mono float64)."""
-    import numpy as np
-
-    if payload[:4] != b"FORM" or payload[8:12] not in (b"AIFF", b"AIFC"):
-        raise ValueError("not an AIFF/AIFC file")
-    pos, comm, ssnd = 12, None, None
-    while pos + 8 <= len(payload):
-        cid = payload[pos : pos + 4]
-        ln = int.from_bytes(payload[pos + 4 : pos + 8], "big")
-        body = payload[pos + 8 : pos + 8 + ln]
-        pos += 8 + ln + (ln & 1)  # chunks pad to even
-        if cid == b"COMM":
-            comm = body
-        elif cid == b"SSND":
-            ssnd = body
-    if comm is None or ssnd is None or len(comm) < 18 or len(ssnd) < 8:
-        raise ValueError("AIFF missing/short COMM or SSND chunk")
-    nch = int.from_bytes(comm[0:2], "big")
-    n_frames = int.from_bytes(comm[2:6], "big")
-    bits = int.from_bytes(comm[6:8], "big")
-    rate = _f80(comm[8:18])
-    # sample_rate flows into an int32 Arrow column: fractional rates
-    # (classic-Mac 22254.5454 Hz) round to the nearest integer rather
-    # than silently truncating in the Arrow cast, and an unbounded 80-bit
-    # field past int32 must dead-letter THIS row, not crash the whole
-    # batch (S9; review finding)
-    if not (0 < rate <= 0x7FFFFFFF):
-        raise ValueError(f"AIFF channels={nch} rate={rate} malformed")
-    rate = int(round(rate))
-    if nch < 1 or rate < 1:
-        raise ValueError(f"AIFF channels={nch} rate={rate} malformed")
-    comp = comm[18:22] if payload[8:12] == b"AIFC" and len(comm) >= 22 else b"NONE"
-    data_off = int.from_bytes(ssnd[0:4], "big")  # alignment preamble
-    data = ssnd[8 + data_off :]
-    if comp in (b"NONE", b"twos"):
-        x = _pcm_be(data, bits)
-    elif comp == b"sowt":
-        if bits != 16:
-            raise ValueError(f"AIFC sowt at {bits} bits unsupported")
-        x = np.frombuffer(data, "<i2", count=len(data) // 2).astype(np.float64) / 32768.0
-    elif comp in (b"fl32", b"FL32"):
-        x = np.frombuffer(data, ">f4", count=len(data) // 4).astype(np.float64)
-    elif comp in (b"fl64", b"FL64"):
-        x = np.frombuffer(data, ">f8", count=len(data) // 8).astype(np.float64)
-    elif comp in (b"ulaw", b"ULAW", b"alaw", b"ALAW"):
-        x = _g711_table(alaw=(comp.lower() == b"alaw"))[np.frombuffer(data, np.uint8)]
-    elif comp == b"raw ":
-        x = (np.frombuffer(data, np.uint8).astype(np.float64) - 128.0) / 128.0
-    else:
-        raise ValueError(f"AIFC compression {comp!r} unsupported")
-    n = len(x) // nch
-    n = min(n, n_frames) if n_frames else n
-    if n == 0:
-        raise ValueError("AIFF data holds no complete frame")
-    return nch, rate, n, x[: n * nch].reshape(n, nch).mean(axis=1)
-
-
-def _wave_chunks(payload: bytes):
-    """RIFF WAVE chunk walk shared by the non-stdlib WAV decoders:
-    returns (fmt chunk bytes, data chunk bytes, fact-chunk frame count or
-    None). Raises ValueError on non-WAVE / missing chunks."""
-    if payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
-        raise ValueError("not a RIFF WAVE")
-    pos, fmt, data, n_total = 12, None, None, None
-    while pos + 8 <= len(payload):
-        cid = payload[pos : pos + 4]
-        ln = int.from_bytes(payload[pos + 4 : pos + 8], "little")
-        body = payload[pos + 8 : pos + 8 + ln]
-        pos += 8 + ln + (ln & 1)  # chunks pad to even offsets
-        if cid == b"fmt ":
-            fmt = body
-        elif cid == b"fact":
-            n_total = int.from_bytes(body[:4], "little")
-        elif cid == b"data":
-            data = body
-    if fmt is None or data is None:
-        raise ValueError("WAVE missing fmt/data chunk")
-    return fmt, data, n_total
-
-
-def _decode_wav_generic(payload: bytes):
-    """REAL decode for the WAV format tags the stdlib ``wave`` module
-    refuses or the fast path skips (round 5): PCM at 8/24/32-bit sample
-    widths, IEEE float (tag 3, 32/64-bit), G.711 A-law (tag 6) and µ-law
-    (tag 7) via their standard segment-expansion formulas, IMA ADPCM
-    (tag 0x11, delegated to the dedicated block decoder), and
-    WAVE_FORMAT_EXTENSIBLE (0xFFFE, real tag read from the SubFormat
-    GUID). Returns (nch, rate, n_frames, mono float64 in [-1, 1]);
-    ValueError on anything malformed (per-row S9 upstream)."""
-    import struct
-
-    import numpy as np
-
-    fmt, data, n_total = _wave_chunks(payload)
-    tag, nch, rate = struct.unpack("<HHI", fmt[:8])
-    bits = struct.unpack("<H", fmt[14:16])[0] if len(fmt) >= 16 else 0
-    if tag == 0xFFFE:  # extensible: the real tag leads the SubFormat GUID
-        if len(fmt) < 26:
-            raise ValueError("extensible WAVE fmt chunk too short")
-        tag = int.from_bytes(fmt[24:26], "little")
-    if tag == 0x11:
-        return _decode_ima_adpcm_wav(payload)
-    if tag == 0x02:
-        return _decode_ms_adpcm(fmt, data, n_total)
-    if nch < 1:
-        raise ValueError("WAVE with zero channels")
-    if tag == 1:  # PCM
-        if bits == 8:
-            x = (np.frombuffer(data, np.uint8).astype(np.float64) - 128.0) / 128.0
-        elif bits == 16:
-            n = len(data) // 2
-            x = np.frombuffer(data, "<i2", count=n).astype(np.float64) / 32768.0
-        elif bits == 24:
-            n = len(data) // 3
-            b = np.frombuffer(data, np.uint8, count=n * 3).reshape(n, 3).astype(np.int64)
-            v = b[:, 0] | (b[:, 1] << 8) | (b[:, 2] << 16)
-            v = np.where(v >= 1 << 23, v - (1 << 24), v)
-            x = v.astype(np.float64) / float(1 << 23)
-        elif bits == 32:
-            n = len(data) // 4
-            x = np.frombuffer(data, "<i4", count=n).astype(np.float64) / float(1 << 31)
-        else:
-            raise ValueError(f"PCM WAVE width {bits} unsupported")
-    elif tag == 3:  # IEEE float
-        if bits == 32:
-            x = np.frombuffer(data, "<f4", count=len(data) // 4).astype(np.float64)
-        elif bits == 64:
-            x = np.frombuffer(data, "<f8", count=len(data) // 8).copy()
-        else:
-            raise ValueError(f"float WAVE width {bits} unsupported")
-    elif tag in (6, 7):  # G.711 A-law / µ-law: expand via a 256-code table
-        x = _g711_table(alaw=(tag == 6))[np.frombuffer(data, np.uint8)]
-    else:
-        raise ValueError(f"WAVE format tag {tag} unsupported")
-    n = len(x) // nch
-    if n == 0:
-        raise ValueError("WAVE data holds no complete frame")
-    x = x[: n * nch].reshape(n, nch).mean(axis=1)
-    if n_total is not None:
-        n = min(n, n_total)
-        x = x[:n]
-    return nch, rate, n, x
-
-
-# MS ADPCM (WAV tag 2) fixed predictor-coefficient pairs and the 4-bit
-# delta adaptation table (Microsoft WAVE spec / RFC 2361 registry codec)
-_MS_ADPCM_COEFFS = [(256, 0), (512, -256), (0, 64), (192, 64), (240, 0), (460, -208), (392, -232)]
-_MS_ADPCM_ADAPT = [230, 230, 230, 230, 307, 409, 512, 614, 768, 614, 512, 409, 307, 230, 230, 230]
-
-
-def _decode_ms_adpcm(fmt: bytes, data: bytes, n_total: int | None):
-    """REAL MS ADPCM (WAV format tag 0x02) decode (round 5): per block
-    and channel a 7-byte header (predictor index into the fixed
-    coefficient table, initial delta, history samples s1/s2 — which ARE
-    the block's first two output samples), then channel-interleaved
-    4-bit nibbles: ``pred = (s1*c1 + s2*c2) >> 8 + signed_nibble*delta``
-    clamped to int16, delta adapted by the 16-entry table with floor 16.
-    Mono+stereo. Returns the same (nch, rate, n, mono float64) shape as
-    the other WAV decoders; ValueError on malformed blocks (S9)."""
-    import struct
-
-    import numpy as np
-
-    _, nch, rate = struct.unpack("<HHI", fmt[:8])
-    block_align = struct.unpack("<H", fmt[12:14])[0]
-    bits = struct.unpack("<H", fmt[14:16])[0]
-    if bits != 4 or nch not in (1, 2) or block_align < 7 * nch + 1:
-        raise ValueError(f"MS ADPCM bits={bits} channels={nch} unsupported")
-    chans: list[list[int]] = [[] for _ in range(nch)]
-    for off in range(0, len(data) - block_align + 1, block_align):
-        block = data[off : off + block_align]
-        pred_i, delta, s1, s2 = [], [], [], []
-        for c in range(nch):
-            pi = block[c]
-            if pi >= len(_MS_ADPCM_COEFFS):
-                raise ValueError("bad MS ADPCM predictor index")
-            pred_i.append(pi)
-        p = nch
-        for c in range(nch):
-            delta.append(struct.unpack_from("<h", block, p + 2 * c)[0])
-        p += 2 * nch
-        for c in range(nch):
-            s1.append(struct.unpack_from("<h", block, p + 2 * c)[0])
-        p += 2 * nch
-        for c in range(nch):
-            s2.append(struct.unpack_from("<h", block, p + 2 * c)[0])
-        p += 2 * nch
-        for c in range(nch):
-            chans[c].extend((s2[c], s1[c]))  # history = first two samples
-        ci = 0  # channel of the NEXT nibble (high nibble first per byte)
-        for b in block[p:]:
-            for nib in (b >> 4, b & 0xF):
-                c = ci % nch
-                ci += 1
-                signed = nib - 16 if nib >= 8 else nib
-                c1, c2 = _MS_ADPCM_COEFFS[pred_i[c]]
-                acc = s1[c] * c1 + s2[c] * c2
-                # the Microsoft reference decode divides by 256 C-style —
-                # truncating toward ZERO. Python's >> 8 floors, off by one
-                # whenever the coefficient sum is negative and not a
-                # multiple of 256; the error feeds back through s1/s2 and
-                # drifts from every standard decoder (round-5 review
-                # finding — the anchor test pins the trunc semantics)
-                pred = acc // 256 if acc >= 0 else -((-acc) // 256)
-                smp = pred + signed * delta[c]
-                smp = -32768 if smp < -32768 else (32767 if smp > 32767 else smp)
-                chans[c].append(smp)
-                s2[c], s1[c] = s1[c], smp
-                delta[c] = max(16, (_MS_ADPCM_ADAPT[nib] * delta[c]) >> 8)
-    n = min(len(ch) for ch in chans)
-    if n_total is not None:
-        n = min(n, n_total)
-    if n == 0:
-        raise ValueError("MS ADPCM data holds no complete block")
-    x = np.array([ch[:n] for ch in chans], dtype=np.float64) / 32768.0
-    return nch, rate, n, x.mean(axis=0)
-
-
-def _decode_ima_adpcm_wav(payload: bytes):
-    """REAL IMA ADPCM (WAV format tag 0x11) decode, stdlib+numpy only —
-    the 4-bit differential codec used by the classic compressed-WAV
-    family (the stdlib ``wave`` module refuses anything but PCM). Parses
-    the RIFF chunks directly, then per block and channel: a 4-byte
-    header carrying the int16 predictor (which IS sample 0 of the
-    block) and the step index, followed by channel-interleaved 4-byte
-    nibble words, low nibble first. Per nibble the standard bitwise
-    reconstruction ``diff = step>>3 (+step if b2) (+step>>1 if b1)
-    (+step>>2 if b0)``, sign from b3, predictor clamped to int16, step
-    index walked through the 89-entry table. Round-trip tested bit-exact
-    against a from-scratch encoder's own reconstruction
-    (tests/test_training_ops.py). Returns (nch, rate, n_frames, mono
-    float64 in [-1,1)). Raises ValueError on anything malformed — the
-    caller keeps it per-row (S9)."""
-    import struct
-
-    import numpy as np
-
-    fmt, data, n_total = _wave_chunks(payload)
-    tag, nch, rate = struct.unpack("<HHI", fmt[:8])
-    block_align = struct.unpack("<H", fmt[12:14])[0]
-    bits = struct.unpack("<H", fmt[14:16])[0]
-    if tag == 0xFFFE:
-        # WAVE_FORMAT_EXTENSIBLE wrapping: the real tag leads the
-        # SubFormat GUID — resolved here too, not only in
-        # _decode_wav_generic, because this decoder re-parses the fmt
-        # chunk (round-5 review finding: extensible-wrapped IMA ADPCM
-        # was rejected after the generic path had already resolved it)
-        if len(fmt) < 26:
-            raise ValueError("extensible WAVE fmt chunk too short")
-        tag = int.from_bytes(fmt[24:26], "little")
-    if tag != 0x11:
-        raise ValueError(f"WAVE format tag {tag} is not IMA ADPCM")
-    if bits != 4 or nch not in (1, 2) or block_align <= 4 * nch:
-        raise ValueError(f"IMA ADPCM bits={bits} channels={nch} unsupported")
-    step_t, index_t = _IMA_STEP_TABLE, _IMA_INDEX_TABLE
-    chans: list[list[int]] = [[] for _ in range(nch)]
-    for off in range(0, len(data) - block_align + 1, block_align):
-        block = data[off : off + block_align]
-        preds, idxs = [], []
-        for c in range(nch):
-            p, i = struct.unpack_from("<hBx", block, 4 * c)
-            if i > 88:
-                raise ValueError("bad IMA ADPCM step index")
-            preds.append(p)
-            idxs.append(i)
-            chans[c].append(p)  # the header predictor IS sample 0
-        body = block[4 * nch :]
-        for g in range(0, len(body) - 4 * nch + 1, 4 * nch):
-            for c in range(nch):
-                pred, index = preds[c], idxs[c]
-                out = chans[c]
-                for b in body[g + 4 * c : g + 4 * c + 4]:
-                    for n in (b & 0xF, b >> 4):
-                        step = step_t[index]
-                        diff = step >> 3
-                        if n & 4:
-                            diff += step
-                        if n & 2:
-                            diff += step >> 1
-                        if n & 1:
-                            diff += step >> 2
-                        pred = pred - diff if n & 8 else pred + diff
-                        pred = -32768 if pred < -32768 else (32767 if pred > 32767 else pred)
-                        index += index_t[n]
-                        index = 0 if index < 0 else (88 if index > 88 else index)
-                        out.append(pred)
-                preds[c], idxs[c] = pred, index
-    n = min(len(ch) for ch in chans)
-    if n_total is not None:
-        n = min(n, n_total)  # fact chunk trims the tail block's padding
-    if n == 0:
-        raise ValueError("IMA ADPCM data holds no complete block")
-    x = np.array([ch[:n] for ch in chans], dtype=np.float64) / 32768.0
-    return nch, rate, n, x.mean(axis=0)
-
-
-def extract_audio_features(media: DataFrame) -> DataFrame:
-    """REAL audio decode (PCM WAV via the stdlib ``wave`` module, IMA/MS
-    ADPCM compressed WAV via the from-scratch decoders above, FLAC via
-    the from-scratch operators/flac.py decoder, AIFF/AIFC and Sun AU via
-    the big-endian decoders above — no external libraries) + featurize:
-    channel/rate/length metadata and an 8-segment RMS-energy profile
-    (the coarse loudness contour). Other compressed payloads (MP3, …)
-    get a per-row ``err`` (S9 isolation) — the seam where
-    torchaudio/ffmpeg would take over."""
-
-    def decode_row(p):
-        if p is None:
-            return (None, None, None, None, None, None)
-        import io
-        import wave
-
-        import numpy as np
-
-        def featurize(nch, rate, n, x):
-            segs = np.array_split(x, 8) if len(x) else []
-            rms = [
-                round(float(np.sqrt((s**2).mean())) if len(s) else 0.0, 6)
-                for s in segs
-            ]
-            dur = round(n / rate, 6) if rate else None
-            return (nch, rate, n, dur, rms, None)
-
-        if p[:4] == b"fLaC":
-            from french_admin_etl_spark.operators.flac import decode_flac_audio
-
-            try:
-                return featurize(*decode_flac_audio(p))
-            except Exception as e:  # noqa: BLE001
-                return (None, None, None, None, None, f"bad FLAC: {e}")
-        if p[:4] == b".snd":
-            try:
-                return featurize(*_decode_au(p))
-            except Exception as e:  # noqa: BLE001
-                return (None, None, None, None, None, f"bad AU: {e}")
-        if p[:4] == b"FORM" and p[8:12] in (b"AIFF", b"AIFC"):
-            try:
-                return featurize(*_decode_aiff(p))
-            except Exception as e:  # noqa: BLE001
-                return (None, None, None, None, None, f"bad AIFF: {e}")
-        try:
-            with wave.open(io.BytesIO(p)) as wf:
-                nch = wf.getnchannels()
-                rate = wf.getframerate()
-                n = wf.getnframes()
-                width = wf.getsampwidth()
-                raw = wf.readframes(n)
-            if width != 2:
-                # 8/24/32-bit PCM: the generic decoder path below
-                raise ValueError(f"sample width {width}: generic path")
-            x = np.frombuffer(raw, dtype=np.int16).astype(np.float64) / 32768.0
-            if nch > 1:
-                x = x.reshape(-1, nch).mean(axis=1)
-            return featurize(nch, rate, n, x)
-        except Exception as e:  # noqa: BLE001
-            # wave.Error on non-WAV, but truncated/empty payloads raise
-            # EOFError (chunk header) or struct.error (reviewer finding)
-            # — all must stay per-row, never fail the task. Everything the
-            # stdlib module refuses lands here and gets the real
-            # from-scratch decode: IMA ADPCM, A-law/µ-law, IEEE float,
-            # 8/24/32-bit PCM, extensible headers (round 5)
-            try:
-                return featurize(*_decode_wav_generic(p))
-            except Exception as e2:  # noqa: BLE001
-                # report BOTH failures: the generic decoder's diagnostic
-                # is usually the root cause (e.g. 'bad IMA ADPCM step
-                # index'), and swallowing it misattributed every such
-                # dead-letter to the stdlib module's vaguer refusal
-                # (review finding)
-                return (
-                    None, None, None, None, None,
-                    f"not a PCM WAV: {type(e).__name__}: {e}; generic "
-                    f"decode: {type(e2).__name__}: {e2}",
-                )
-
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            d = pdf["payload"].map(decode_row)
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "n_channels": d.map(lambda t: t[0]),
-                    "sample_rate": d.map(lambda t: t[1]),
-                    "n_frames": d.map(lambda t: t[2]),
-                    "duration_sec": d.map(lambda t: t[3]),
-                    "rms_segments": d.map(lambda t: t[4]),
-                    "err": d.map(lambda t: t[5]),
-                }
-            )
-
-    auds = media.filter(F.col("kind") == "audio").select("media_id", "payload")
-    return auds.mapInPandas(process, schema=AUDIO_FEATURES_SCHEMA)
-
-
 def media_metadata(media: DataFrame) -> DataFrame:
     """Blob metadata without any decode — pure JVM column ops (byte length,
     magic-prefix hex, content hash). This is the cheap first pass that runs
@@ -1339,72 +765,3 @@ def media_metadata(media: DataFrame) -> DataFrame:
     )
 
 
-def sample_video_frames(
-    media: DataFrame, every_nth: int = 30, decode_stub: bool = True
-) -> DataFrame:
-    """Frame sampling for video payloads: emits (media_id, frame_idx,
-    frame_sha, err) rows — every Nth frame's luma digest.
-
-    ``decode_stub=False`` does REAL frame iteration for library-free
-    containers (Y4M planar YCbCr and uncompressed 24-bit AVI —
-    ``operators/video.py``); ``frame_sha`` is the sha256 of the frame's
-    gray plane bytes, so downstream exact frame dedup works across
-    containers that carry identical pixels. Compressed codecs (the
-    ffmpeg seam) and corrupt payloads dead-letter per row (S9) — one
-    err row, batch survives. The frame iterator is lazy: sampling every
-    Nth frame skips the rest without materializing them as rows, and
-    payloads stay inside the executor (Arrow batches, never the driver).
-
-    The stub path keeps the deterministic pseudo frames for pipelines
-    exercised without media fixtures."""
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType(), False),
-            T.StructField("frame_idx", T.IntegerType(), True),
-            T.StructField("frame_sha", T.StringType(), True),
-            T.StructField("err", T.StringType(), True),
-        ]
-    )
-
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from french_admin_etl_spark.operators.video import decode_video_frames
-
-        for pdf in batches:
-            rows = {"media_id": [], "frame_idx": [], "frame_sha": [], "err": []}
-
-            def emit(mid, idx, sha, err=None):
-                rows["media_id"].append(mid)
-                rows["frame_idx"].append(idx)
-                rows["frame_sha"].append(sha)
-                rows["err"].append(err)
-
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                if payload is None:
-                    continue
-                if decode_stub:
-                    h = hashlib.sha256(payload).digest()
-                    n_frames = 60 + h[0]  # deterministic pseudo frame count
-                    for idx in range(0, n_frames, every_nth):
-                        emit(
-                            mid,
-                            idx,
-                            hashlib.sha256(payload + idx.to_bytes(4, "big")).hexdigest(),
-                        )
-                    continue
-                try:
-                    for idx, _w, _h, gray in decode_video_frames(bytes(payload)):
-                        if idx % every_nth:
-                            continue
-                        emit(
-                            mid,
-                            idx,
-                            hashlib.sha256(
-                                gray.astype("uint8").tobytes()
-                            ).hexdigest(),
-                        )
-                except Exception as e:  # noqa: BLE001 — S9 per-row isolation
-                    emit(mid, None, None, f"{type(e).__name__}: {e}")
-            yield pd.DataFrame(rows)
-
-    vids = media.filter(F.col("kind") == "video").select("media_id", "payload")
-    return vids.mapInPandas(process, schema=schema)

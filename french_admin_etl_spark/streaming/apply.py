@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from french_admin_etl_spark.functions.hashing import content_sha, sha256_udf
+from french_admin_etl_spark.functions.hashing import content_sha
 from french_admin_etl_spark.operators.dedup import dedup_coalesce, dedup_max_seq
 from french_admin_etl_spark.operators.validate import validate_split
 from french_admin_etl_spark.sources.event_log import EventLog
@@ -113,25 +113,14 @@ class CDCApplyJob:
         table: LakeTable,
         dead_letter_dir: str | None = None,
         lineage_dir: str | None = None,
-        use_pandas_sha: bool = False,
         merge_mode: str = "overwrite",
         writer_id: str | None = None,
-        cache_batches: bool = True,
     ):
         self.spark = spark
         self.table = table
         self.dead_letter_dir = dead_letter_dir
         self.lineage_dir = lineage_dir
-        self.use_pandas_sha = use_pandas_sha
         self.merge_mode = merge_mode
-        # cache_batches: materialize each micro-batch in executor memory
-        # before its 2-3 consumers (schema-marker collect + counts, the
-        # merge pipeline, lineage). With a columnar source and LSN
-        # pushdown, re-scanning parquet can be cheaper than the cache
-        # serialization — measured on this host the difference is inside
-        # run-to-run noise, so caching stays the default (a remote object
-        # store changes the trade decisively toward caching).
-        self.cache_batches = cache_batches
         # multi-writer topology (one job per log partition into one table):
         # each job passes a distinct writer_id so its exactly-once fence is
         # namespaced per writer instead of a shared scalar
@@ -190,19 +179,10 @@ class CDCApplyJob:
 
     def _normalize(self, df: DataFrame) -> DataFrame:
         """Project to MERGE-source shape + derived sha (vectorized; never
-        per-row Python — input_hint).
+        per-row Python).
 
-        Default sha is JVM ``sha2`` (whole-stage codegen); the Arrow
-        pandas-UDF form (``use_pandas_sha=True``) is semantically identical
-        (tested) but measured ~1.5-2x slower and anti-scaling past ~16
-        local cores — Arrow IPC per batch outweighs hashing at high thread
-        counts. On a real cluster with per-node python workers the gap
-        narrows, but built-in JVM functions remain the right default."""
-        sha = (
-            F.when(F.col("content").isNotNull(), sha256_udf(F.col("content")))
-            if self.use_pandas_sha
-            else F.when(F.col("content").isNotNull(), content_sha("content"))
-        )
+        The sha is JVM ``sha2`` (whole-stage codegen)."""
+        sha = F.when(F.col("content").isNotNull(), content_sha("content"))
         snap = self.table.snapshot()  # once: listdir + full JSON parse per call
         logical = [
             f["name"] for f in snap["schemas"][str(snap["schema_version"])]["fields"]
@@ -247,8 +227,9 @@ class CDCApplyJob:
         ``run_incremental``'s (e.g. the balanced driver) so two sequences
         against one table/checkpoint can never fence each other out."""
         t0 = time.monotonic()
-        if self.cache_batches:
-            events = events.cache()
+        # the batch has 2-3 consumers (schema-marker collect + counts, the
+        # merge pipeline, lineage): materialize it once in executor memory
+        events = events.cache()
         try:
             return self._apply_batch_inner(events, batch_id, fence_writer, t0)
         finally:

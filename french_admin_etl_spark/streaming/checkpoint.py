@@ -14,6 +14,14 @@ import json
 import os
 
 
+def _fsync_dir(d: str) -> None:
+    dfd = os.open(d, os.O_RDONLY)
+    try:
+        os.fsync(dfd)
+    finally:
+        os.close(dfd)
+
+
 class CheckpointStore:
     def __init__(self, path: str):
         self.path = path
@@ -43,11 +51,7 @@ class CheckpointStore:
             os.fsync(fh.fileno())
         os.replace(tmp, self.path)  # atomic on POSIX
         if d:
-            dfd = os.open(d, os.O_RDONLY)
-            try:
-                os.fsync(dfd)
-            finally:
-                os.close(dfd)
+            _fsync_dir(d)
 
 
 def stream_fence_uid(checkpoint_dir: str) -> str:
@@ -72,11 +76,17 @@ def stream_fence_uid(checkpoint_dir: str) -> str:
     # racing on a fresh dir must agree on ONE uid — a write-then-replace
     # here would let the loser keep fencing under a uid that was never
     # persisted (reviewer finding). os.link fails if the target exists,
-    # so exactly one minter wins and the loser re-reads.
+    # so exactly one minter wins and the loser re-reads. The tmp is
+    # fsynced before the link and the directory after it, as in
+    # CheckpointStore.save: otherwise a power loss can bring engine_id
+    # back empty, and every checkpoint dir that lost its uid would share
+    # the fence namespace "".
     uid = uuid.uuid4().hex[:12]
     tmp = f"{uid_path}.{uid}.tmp"
     with open(tmp, "w") as fh:
         fh.write(uid)
+        fh.flush()
+        os.fsync(fh.fileno())
     try:
         os.link(tmp, uid_path)
     except FileExistsError:
@@ -84,4 +94,5 @@ def stream_fence_uid(checkpoint_dir: str) -> str:
             uid = fh.read().strip()
     finally:
         os.unlink(tmp)
+    _fsync_dir(checkpoint_dir)
     return uid

@@ -1481,17 +1481,24 @@ class LakeTable:
         fresh batch as writer A's replay and silently drop it."""
         groups, delta = staged["groups"], staged["delta"]
         keys, nb, sv, coalesce = staged["keys"], staged["nb"], staged["sv"], staged["coalesce"]
+        # file groups staged per bucket count: an attempt whose layout was
+        # already staged reuses it. Restaging is a Spark job, so a
+        # maintenance loop that rebuckets (8→2→4→8…) faster than one
+        # restage would otherwise win every race and starve the writer.
+        staged_by_nb = {nb: groups}
         for attempt in range(10):
             snap = self.snapshot()
             if batch_id is not None:
                 fence = snap["properties"].get(fence_key)
                 if fence is not None and batch_id <= fence:
                     return MergeStats(batch_id, snap["version"], 0, 0, 0, fenced=True)
-            nb, delta, regrouped = self._restage_on_layout_change(
-                snap, nb, delta, keys, sv, coalesce
-            )
-            if regrouped is not None:
-                groups = regrouped
+            if snap["num_buckets"] not in staged_by_nb:
+                nb, delta, groups = self._restage_on_layout_change(
+                    snap, nb, delta, keys, sv, coalesce
+                )
+                staged_by_nb[nb] = groups
+            nb = snap["num_buckets"]
+            groups = staged_by_nb[nb]
             # commit seq = the version this attempt will commit as; the read
             # path uses it to break equal-LSN ties by commit order
             for g in groups:

@@ -1,4 +1,4 @@
-"""Deterministic mutation fuzz over every from-scratch decoder: valid
+"""Deterministic mutation fuzz over every from-scratch image decoder: valid
 payloads from the repo's own test encoders, then seeded bit flips and
 truncations. The S9 per-row contract only needs the extractors' broad
 ``except Exception`` — so the invariant here is TERMINATION and exception
@@ -10,11 +10,7 @@ loop before a poisoned 100-TB batch does."""
 import numpy as np
 import pytest
 
-from french_admin_etl_spark.operators.multimodal import (
-    _decode_wav_generic,
-    decode_image,
-)
-from french_admin_etl_spark.operators.video import decode_video_frames
+from french_admin_etl_spark.operators.multimodal import decode_image
 
 from test_jpeg import (
     encode_jpeg,
@@ -45,11 +41,7 @@ def _drive(fn, corpus):
     ok = err = 0
     for p in corpus:
         try:
-            res = fn(p)
-            # generators (video) must be drained to execute
-            if hasattr(res, "__iter__") and not isinstance(res, tuple):
-                for _ in res:
-                    pass
+            fn(p)
             ok += 1
         except Exception as e:  # noqa: BLE001 — the extractors catch this
             assert not isinstance(e, (SystemExit, KeyboardInterrupt))
@@ -165,6 +157,29 @@ def _valid_image_payloads():
                     palette=rng.randint(0, 256, (256, 3)).astype(np.int64))),
         (12, 12, _dib(rng.randint(0, 256, (12, 12, 3)).astype(np.int64), 32)),
     ])
+    # interlaced GIF and a minimal 8-bit gray PNG (filter 0 rows)
+    import struct
+    import zlib
+
+    from test_training_ops import _gif_encode
+
+    rng5 = np.random.RandomState(5)
+    pal = rng5.randint(0, 256, (8, 3))
+    idx = rng5.randint(0, 8, (9, 7)).astype(np.uint8)
+    pay["gif"] = _gif_encode(idx, pal, 3, interlaced=True)
+    gpx = rng5.randint(0, 256, (6, 5), dtype=np.uint8)
+    raw = b"".join(b"\x00" + r.tobytes() for r in gpx)
+
+    def chunk(tag, body):
+        c = tag + body
+        return len(body).to_bytes(4, "big") + c + zlib.crc32(c).to_bytes(4, "big")
+
+    pay["png"] = (
+        b"\x89PNG\r\n\x1a\n"
+        + chunk(b"IHDR", struct.pack(">IIBBBBB", 5, 6, 8, 0, 0, 0, 0))
+        + chunk(b"IDAT", zlib.compress(raw))
+        + chunk(b"IEND", b"")
+    )
     return pay
 
 
@@ -179,127 +194,3 @@ def test_fuzz_image_decoders_terminate():
         assert ok + err == 41, name  # every mutation terminated
 
 
-def test_fuzz_video_decoders_terminate():
-    # Y4M: 3 frames of 8x6 4:2:0
-    w, h = 8, 6
-    rng = np.random.default_rng(11)
-    frames = b"".join(
-        b"FRAME\n" + bytes(rng.integers(0, 256, w * h + 2 * (w // 2) * (h // 2), dtype=np.uint8).tobytes())
-        for _ in range(3)
-    )
-    y4m = f"YUV4MPEG2 W{w} H{h} F25:1 C420\n".encode() + frames
-    for _ in decode_video_frames(y4m):
-        pass
-    ok, err = _drive(decode_video_frames, _mutations(y4m, rng))
-    assert ok + err == 41
-
-
-def test_fuzz_audio_decoder_terminates():
-    rng = np.random.default_rng(23)
-    import struct
-
-    pcm = rng.integers(-30000, 30000, 400, dtype=np.int16).tobytes()
-    fmt = struct.pack("<HHIIHH", 1, 1, 8000, 16000, 2, 16)
-    wav = (
-        b"RIFF" + bytes(4) + b"WAVE"
-        + b"fmt " + len(fmt).to_bytes(4, "little") + fmt
-        + b"data" + len(pcm).to_bytes(4, "little") + pcm
-    )
-    assert _decode_wav_generic(wav)[2] == 400
-    ok, err = _drive(_decode_wav_generic, _mutations(wav, rng))
-    assert ok + err == 41
-
-    from french_admin_etl_spark.operators.multimodal import _decode_aiff, _decode_au
-    from test_training_ops import _aiff, _au
-
-    au = _au(3, 1, 8000, rng.integers(-30000, 30000, 200, dtype=np.int16).astype(">i2").tobytes())
-    assert _decode_au(au)[2] == 200
-    ok, err = _drive(_decode_au, _mutations(au, rng))
-    assert ok + err == 41
-    aiff = _aiff(1, 150, 16, 22050, rng.integers(-30000, 30000, 150, dtype=np.int16).astype(">i2").tobytes(), comp=b"sowt")
-    assert _decode_aiff(aiff)[2] == 150
-    ok, err = _drive(_decode_aiff, _mutations(aiff, rng))
-    assert ok + err == 41
-
-
-def test_fuzz_flac_decoder_terminates():
-    from french_admin_etl_spark.operators.flac import decode_flac, encode_flac
-
-    rng = np.random.default_rng(29)
-    import math
-
-    x = [int(9000 * math.sin(i / 20)) for i in range(700)]
-    for name, blob in (
-        ("fixed", encode_flac([x], 8000, bps=16, blocksize=256)),
-        ("stereo_lpc", encode_flac(
-            [x, [v + 100 for v in x]], 44100, bps=16, blocksize=192,
-            stereo_mode="mid_side", lpc=([1400, -600], 12, 10), part_order=1,
-        )),
-    ):
-        assert decode_flac(blob)[3][0] == x  # pristine must decode
-        ok, err = _drive(decode_flac, _mutations(blob, rng))
-        assert ok + err == 41, name
-
-
-def test_fuzz_gif_png_avi_terminate():
-    import struct
-    import zlib
-
-    from test_training_ops import _gif_encode
-    from test_video import _avi, _avi_mjpeg, _gif_animated
-
-    rng0 = np.random.RandomState(5)
-    pal = rng0.randint(0, 256, (8, 3))
-    idx = rng0.randint(0, 8, (9, 7)).astype(np.uint8)
-    gif = _gif_encode(idx, pal, 3, interlaced=True)
-
-    # minimal 8-bit gray PNG, filter 0 rows
-    gpx = rng0.randint(0, 256, (6, 5), dtype=np.uint8)
-    raw = b"".join(b"\x00" + r.tobytes() for r in gpx)
-
-    def chunk(tag, body):
-        c = tag + body
-        return len(body).to_bytes(4, "big") + c + zlib.crc32(c).to_bytes(4, "big")
-
-    png = (
-        b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", struct.pack(">IIBBBBB", 5, 6, 8, 0, 0, 0, 0))
-        + chunk(b"IDAT", zlib.compress(raw))
-        + chunk(b"IEND", b"")
-    )
-
-    frames = [rng0.randint(0, 256, ((4, 6, 3)), ).astype(np.uint8) for _ in range(2)]
-    avi = _avi(frames, 6, 4)
-    jp = encode_jpeg(
-        [rng0.randint(0, 256, (8, 8)).astype(np.float64)], 8, 8,
-        [(1, 1)], [0], {0: np.ones((8, 8))},
-    )
-    mjpeg = _avi_mjpeg([jp, jp], 8, 8)
-    anim = _gif_animated(
-        7, 9, pal,
-        [(idx, 0, 0, 0, None), (idx[:4, :3].copy(), 2, 1, 2, 3)],
-    )
-    from test_video import _apng
-
-    apng = _apng(
-        5, 4, 6,
-        [
-            (rng0.randint(0, 256, (4, 5, 4)).astype(np.uint8), 0, 0, 0, 0),
-            (rng0.randint(0, 256, (2, 3, 4)).astype(np.uint8), 1, 1, 2, 1),
-        ],
-    )
-
-    for name, p, fn in (
-        ("gif", gif, decode_image),
-        ("png", png, decode_image),
-        ("avi", avi, decode_video_frames),
-        ("mjpeg", mjpeg, decode_video_frames),
-        ("gif_anim", anim, decode_video_frames),
-        ("apng", apng, decode_video_frames),
-    ):
-        res = fn(p)  # pristine must decode / iterate
-        if hasattr(res, "__iter__") and not isinstance(res, tuple):
-            assert sum(1 for _ in res) >= 1
-        rng = np.random.default_rng(hash(name) & 0xFFFF)
-        ok, err = _drive(fn, _mutations(p, rng))
-        assert ok + err == 41, name

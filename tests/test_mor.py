@@ -703,3 +703,45 @@ def test_mor_writers_race_rebucket_and_compaction(spark, tmp_root):
     # skipped and a key forked across layouts)
     table.compact(include_clean=True)
     assert _state(table) == exp
+
+
+def test_mor_commit_reuses_staged_layouts_under_rebucket_churn(
+    spark, tmp_root, monkeypatch
+):
+    """A writer whose commit attempts keep losing to rebuckets that flip
+    the bucket count (4→8→4→…) stages each layout once and commits from
+    the staged copy. Restaging on every lost attempt costs a Spark job
+    per race, so a maintenance loop faster than one restage starved the
+    writer into ``CommitConflict`` after its retry budget."""
+    import itertools
+
+    table = _mk_mor(spark, tmp_root, "churn")
+    maint = LakeTable(spark, os.path.join(tmp_root, "churn"))
+    table.merge(spark.createDataFrame([("r", "a", "c", "py", "v1", "s1", 1, "I")], _COLS),
+                batch_id=0)
+
+    real_commit, real_stage = table._commit, table._stage_write
+    sizes, races, stages = itertools.cycle([8, 4]), iter(range(6)), []
+
+    def racing_commit(snap):
+        if next(races, None) is not None:
+            maint.rebucket(next(sizes))  # a maintenance commit lands first
+        real_commit(snap)
+
+    def counting_stage(*a, **k):
+        stages.append(1)
+        return real_stage(*a, **k)
+
+    monkeypatch.setattr(table, "_commit", racing_commit)
+    monkeypatch.setattr(table, "_stage_write", counting_stage)
+    stats = table.merge(
+        spark.createDataFrame([("r", "b", "c", "py", "v2", "s2", 2, "I")], _COLS),
+        batch_id=1,
+    )
+    assert not stats.fenced
+    assert next(races, None) is None  # all six races were lost first
+    assert len(stages) == 2  # the first stage at 4 buckets + one restage at 8
+    want = {("r", "a"): "s1", ("r", "b"): "s2"}
+    assert _state(table) == want
+    table.compact(include_clean=True)  # no key forked across layouts
+    assert _state(table) == want

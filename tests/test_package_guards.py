@@ -1,6 +1,7 @@
 """Static guards over the package source (no Spark)."""
 
 import ast
+import importlib.util
 import pathlib
 
 import french_admin_etl_spark
@@ -33,3 +34,23 @@ def test_create_dataframe_only_in_local_frame():
             ):
                 offenders.append(f"{path.relative_to(PKG.parent)}:{node.lineno}")
     assert offenders == [], offenders
+
+
+def test_driver_contract_imports_and_registries_match():
+    """``__spark_entry__`` imports the package's operators at module load,
+    so deleting or renaming one breaks the driver contract before any
+    query runs. Each query must have its oracle twin, and the contract
+    holds exactly 50 queries."""
+    spec = importlib.util.spec_from_file_location(
+        "__spark_entry__", PKG.parent / "__spark_entry__.py"
+    )
+    entry = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(entry)
+    assert callable(entry.entry)
+    for queries, oracles in [
+        (entry.queries(), entry.oracle_sql()),
+        (entry.extra_queries(), entry.extra_oracle_sql()),
+    ]:
+        assert set(queries) == set(oracles)
+        assert all(callable(q) for q in queries.values())
+    assert len(entry.queries()) == 50

@@ -24,7 +24,6 @@ from french_admin_etl_spark.operators.multimodal import (
     MEDIA_SCHEMA,
     extract_image_features,
     media_metadata,
-    sample_video_frames,
 )
 from french_admin_etl_spark.operators.similarity import (
     cosine_topk,
@@ -253,48 +252,6 @@ def test_real_image_decode_ppm_bmp_and_err_isolation(spark):
     assert out[1]["err"] is None
 
 
-def test_real_audio_decode_wav(spark):
-    """REAL PCM WAV decode via the stdlib: duration/rate/channels exact,
-    and the 8-segment RMS profile separates a silent first half from a
-    loud second half; a non-WAV payload gets a per-row err."""
-    import io
-    import struct
-    import wave
-
-    from french_admin_etl_spark.operators.multimodal import extract_audio_features
-
-    buf = io.BytesIO()
-    rate, n = 8000, 8000  # 1.0s mono
-    with wave.open(buf, "wb") as wf:
-        wf.setnchannels(1)
-        wf.setsampwidth(2)
-        wf.setframerate(rate)
-        samples = [0] * (n // 2) + [16384] * (n // 2)  # silence then loud
-        wf.writeframes(struct.pack(f"<{n}h", *samples))
-    rows = [
-        (1, "audio", "audio/wav", buf.getvalue()),
-        (2, "audio", "audio/mp3", b"ID3\x03" + b"q" * 64),
-    ]
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    out = {r["media_id"]: r for r in extract_audio_features(media).collect()}
-    assert out[1]["err"] is None
-    assert out[1]["n_channels"] == 1 and out[1]["sample_rate"] == rate
-    assert out[1]["n_frames"] == n and out[1]["duration_sec"] == 1.0
-    rms = out[1]["rms_segments"]
-    assert len(rms) == 8
-    assert all(abs(v) < 1e-6 for v in rms[:4])  # silent half
-    assert all(abs(v - 0.5) < 1e-3 for v in rms[4:])  # 16384/32768 = 0.5
-    assert out[2]["err"] is not None and out[2]["rms_segments"] is None
-
-
-def test_video_frame_sampling(media):
-    frames = sample_video_frames(media, every_nth=30).collect()
-    assert all(r["media_id"] == 3 for r in frames)
-    idxs = sorted(r["frame_idx"] for r in frames)
-    assert idxs[0] == 0 and all(i % 30 == 0 for i in idxs)
-    assert len({r["frame_sha"] for r in frames}) == len(frames)
-
-
 def test_simhash_near_dup_pairs_pigeonhole_equals_bruteforce(docs, spark):
     """Band-blocked simhash pairs at hamming <= 3 must equal the brute-force
     all-pairs answer exactly (pigeonhole: distance < bands guarantees a
@@ -469,8 +426,6 @@ def test_corrupt_media_rows_isolated_not_fatal(spark):
     """Reviewer finding: corrupt payloads with a SUPPORTED magic raised
     ValueError/EOFError past the old narrow catches and killed the task.
     Every malformed row must become a per-row err, never a job failure."""
-    from french_admin_etl_spark.operators.multimodal import extract_audio_features
-
     rows = [
         (1, "image", "image/x-ppm", b"P6\n16 12\n255\n\x00\x01"),   # truncated pixels
         (2, "image", "image/x-ppm", b"P6\nnot a number\n"),          # garbage header
@@ -484,15 +439,6 @@ def test_corrupt_media_rows_isolated_not_fatal(spark):
     }
     assert out[1]["err"] and out[2]["err"] and out[3]["err"]
     assert out[4]["err"] is None and out[4]["width"] == 4  # batch survived
-
-    audio = spark.createDataFrame(
-        [(1, "audio", "audio/wav", b"RIFF\x04\x00"),   # truncated → EOFError
-         (2, "audio", "audio/wav", b""),               # empty
-         (3, "audio", "audio/mpeg", b"ID3\x03" + b"x" * 40)],
-        MEDIA_SCHEMA,
-    )
-    got = {r["media_id"]: r for r in extract_audio_features(audio).collect()}
-    assert all(got[i]["err"] for i in (1, 2, 3))
 
 
 def test_connected_components_raises_on_nonconvergence(spark):
@@ -806,143 +752,6 @@ def test_gif_decode_roundtrip(spark):
         decode_image(whole[:-8])
 
 
-def _ima_adpcm_encode(x, rate, nch, samples_per_block=505):
-    """From-scratch IMA ADPCM WAV encoder for round-trip testing the
-    decoder: per-block 4-byte channel headers (predictor = sample 0),
-    channel-interleaved 4-byte nibble words low-nibble-first, standard
-    bitwise quantize + the SAME reconstruction the decoder runs.
-    Returns (wav_bytes, reconstruction int16 array (n, nch)) — the codec
-    is lossy vs the input, so the bit-exact invariant is against the
-    encoder's own reconstruction, not the source."""
-    import struct
-
-    import numpy as np
-
-    from french_admin_etl_spark.operators.multimodal import (
-        _IMA_INDEX_TABLE,
-        _IMA_STEP_TABLE,
-    )
-
-    def enc_one(s, pred, index):
-        step = _IMA_STEP_TABLE[index]
-        delta = s - pred
-        n = 0
-        if delta < 0:
-            n = 8
-            delta = -delta
-        if delta >= step:
-            n |= 4
-            delta -= step
-        if delta >= step >> 1:
-            n |= 2
-            delta -= step >> 1
-        if delta >= step >> 2:
-            n |= 1
-        diff = step >> 3
-        if n & 4:
-            diff += step
-        if n & 2:
-            diff += step >> 1
-        if n & 1:
-            diff += step >> 2
-        pred = max(-32768, min(32767, pred - diff if n & 8 else pred + diff))
-        index = max(0, min(88, index + _IMA_INDEX_TABLE[n]))
-        return n, pred, index
-
-    assert samples_per_block % 2 == 1
-    x = np.asarray(x, np.int64).reshape(-1, nch)
-    n = len(x)
-    blocks = bytearray()
-    preds, idxs = [0] * nch, [0] * nch
-    recon_rows = []
-    for start in range(0, n, samples_per_block):
-        seg = x[start : start + samples_per_block]
-        orig_len = len(seg)
-        if len(seg) < samples_per_block:
-            seg = np.vstack(
-                [seg, np.repeat(seg[-1:], samples_per_block - len(seg), axis=0)]
-            )
-        rec = np.zeros_like(seg)
-        nibs = [[] for _ in range(nch)]
-        for c in range(nch):
-            preds[c] = int(seg[0, c])
-            rec[0, c] = preds[c]
-            blocks += struct.pack("<hBx", preds[c], idxs[c])
-        for c in range(nch):
-            for j, s in enumerate(seg[1:, c], start=1):
-                nb, preds[c], idxs[c] = enc_one(int(s), preds[c], idxs[c])
-                nibs[c].append(nb)
-                rec[j, c] = preds[c]
-        for g in range(0, len(nibs[0]), 8):
-            for c in range(nch):
-                w = nibs[c][g : g + 8]
-                for k in range(0, 8, 2):
-                    blocks.append(w[k] | (w[k + 1] << 4))
-        recon_rows.append(rec[:orig_len])
-    block_align = 4 * nch + (samples_per_block - 1) * nch // 2
-    data = bytes(blocks)
-    fmt = struct.pack(
-        "<HHIIHHHH", 0x11, nch, rate, rate * block_align // samples_per_block,
-        block_align, 4, 2, samples_per_block,
-    )
-    fact = struct.pack("<I", n)
-    o = (
-        b"WAVE"
-        + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-        + b"fact" + struct.pack("<I", len(fact)) + fact
-        + b"data" + struct.pack("<I", len(data)) + data
-    )
-    return b"RIFF" + struct.pack("<I", len(o)) + o, np.vstack(recon_rows)
-
-
-def test_ima_adpcm_decode_roundtrip(spark):
-    """Library-free IMA ADPCM WAV decode (round-5 codec off the seam
-    list): mono and stereo, multi-block with a padded tail block trimmed
-    by the fact chunk, bit-exact against the encoder's reconstruction;
-    wired into extract_audio_features as the fallback when stdlib wave
-    refuses the compressed format; malformed payloads stay per-row."""
-    import numpy as np
-
-    from french_admin_etl_spark.operators.multimodal import (
-        _decode_ima_adpcm_wav,
-        extract_audio_features,
-    )
-
-    rng = np.random.default_rng(5)
-    t = np.arange(2000) / 8000.0
-    sig = 0.6 * np.sin(2 * np.pi * 440 * t) + 0.05 * rng.standard_normal(len(t))
-    base = np.clip(sig * 32767, -32768, 32767).astype(np.int16)
-    wavs = {}
-    for nch in (1, 2):
-        xx = np.stack([base] * nch, axis=1)
-        if nch == 2:
-            xx[:, 1] = np.roll(xx[:, 1], 3)
-        wav, recon = _ima_adpcm_encode(xx, 8000, nch)
-        dn, dr, dnf, mono = _decode_ima_adpcm_wav(wav)
-        assert (dn, dr, dnf) == (nch, 8000, 2000)
-        want = recon.astype(np.float64).mean(axis=1) / 32768.0
-        assert np.allclose(mono, want)  # bit-exact vs encoder recon
-        # and close to the source signal (it IS an audio codec)
-        src = xx.astype(np.float64).mean(axis=1) / 32768.0
-        assert np.sqrt(((mono - src) ** 2).mean()) < 0.05
-        wavs[nch] = wav
-
-    rows = [
-        (1, "audio", "audio/wav", wavs[1]),
-        (2, "audio", "audio/wav", wavs[2]),
-        (3, "audio", "audio/wav", wavs[1][:40]),  # truncated: per-row err
-    ]
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    out = {r["media_id"]: r for r in extract_audio_features(media).collect()}
-    for mid, nch in ((1, 1), (2, 2)):
-        assert out[mid]["err"] is None
-        assert out[mid]["n_channels"] == nch and out[mid]["sample_rate"] == 8000
-        assert out[mid]["n_frames"] == 2000 and out[mid]["duration_sec"] == 0.25
-        assert len(out[mid]["rms_segments"]) == 8
-        assert all(0.3 < v < 0.6 for v in out[mid]["rms_segments"])
-    assert out[3]["err"] is not None and out[3]["rms_segments"] is None
-
-
 def test_png_depths_palette_adam7():
     """Round 5 PNG surface: 16-bit samples, sub-byte gray depths,
     palette (PLTE) images, and Adam7 interlace — each encoded by hand
@@ -1127,238 +936,6 @@ def test_pnm_16bit_and_bmp_palette():
         decode_image(header + pal.tobytes() + bad_pix)
 
 
-def _wav(tag, nch, rate, bits, data, fact=None, extensible=False):
-    """Minimal RIFF WAVE with one fmt/data chunk pair (fact optional)."""
-    import struct
-
-    if extensible:
-        # WAVE_FORMAT_EXTENSIBLE: real tag leads the SubFormat GUID
-        fmt = struct.pack(
-            "<HHIIHH", 0xFFFE, nch, rate, rate * nch * bits // 8,
-            nch * bits // 8, bits,
-        ) + struct.pack("<HHI", 22, bits, 0) + tag.to_bytes(2, "little") + bytes(14)
-    else:
-        fmt = struct.pack(
-            "<HHIIHH", tag, nch, rate, rate * nch * bits // 8,
-            nch * bits // 8, bits,
-        )
-    out = bytearray(b"RIFF\x00\x00\x00\x00WAVE")
-    out += b"fmt " + len(fmt).to_bytes(4, "little") + fmt
-    if fact is not None:
-        out += b"fact\x04\x00\x00\x00" + fact.to_bytes(4, "little")
-    out += b"data" + len(data).to_bytes(4, "little") + data
-    if len(data) & 1:
-        out += b"\x00"
-    return bytes(out)
-
-
-def test_wav_generic_formats():
-    """Round 5 audio surface: PCM 8/24/32-bit, IEEE float, G.711
-    A-law/µ-law (sign conventions pinned to the standard's anchor
-    values), extensible headers — all through _decode_wav_generic and
-    the extract_audio_features fallback chain."""
-    import numpy as np
-
-    from french_admin_etl_spark.operators.multimodal import _decode_wav_generic
-
-    rng = np.random.RandomState(9)
-
-    # 24-bit PCM stereo: exact reconstruction incl. negatives
-    v = rng.randint(-(1 << 23), 1 << 23, (50, 2))
-    raw = b"".join(
-        int(x).to_bytes(3, "little", signed=True) for fr in v for x in fr
-    )
-    nch, rate, n, x = _decode_wav_generic(_wav(1, 2, 16000, 24, raw))
-    assert (nch, rate, n) == (2, 16000, 50)
-    assert np.allclose(x, v.mean(axis=1) / (1 << 23))
-
-    # 8-bit PCM (unsigned, midpoint 128) and 32-bit PCM
-    b8 = rng.randint(0, 256, 40).astype(np.uint8)
-    _, _, n, x = _decode_wav_generic(_wav(1, 1, 8000, 8, b8.tobytes()))
-    assert n == 40 and np.allclose(x, (b8.astype(np.float64) - 128) / 128)
-    v32 = rng.randint(-(1 << 31), 1 << 31 - 1, 30, dtype=np.int64).astype("<i4")
-    _, _, n, x = _decode_wav_generic(_wav(1, 1, 8000, 32, v32.tobytes()))
-    assert n == 30 and np.allclose(x, v32.astype(np.float64) / (1 << 31))
-
-    # IEEE float32, via an EXTENSIBLE header
-    f32 = (rng.rand(25) * 2 - 1).astype("<f4")
-    _, _, n, x = _decode_wav_generic(
-        _wav(3, 1, 44100, 32, f32.tobytes(), extensible=True)
-    )
-    assert n == 25 and np.allclose(x, f32.astype(np.float64))
-
-    # µ-law anchor values (G.711): 0xFF and 0x7F are zero, 0x00 is the
-    # negative extreme -32124, 0x80 the positive extreme
-    _, _, _, x = _decode_wav_generic(
-        _wav(7, 1, 8000, 8, bytes([0xFF, 0x7F, 0x00, 0x80]))
-    )
-    assert np.allclose(x * 32768, [0, 0, -32124, 32124])
-
-    # A-law anchors: 0xD5 -> +8, 0x55 -> -8, 0xAA/0x2A are the extremes
-    _, _, _, x = _decode_wav_generic(
-        _wav(6, 1, 8000, 8, bytes([0xD5, 0x55, 0xAA, 0x2A]))
-    )
-    assert np.allclose(x * 32768, [8, -8, 32256, -32256])
-
-    # G.711 companding is useful: a µ-law-coded sine (nearest-code
-    # encoding against the decoder-independent expand values) decodes to
-    # within ~1% RMS of the 16-bit original
-    t = np.arange(800)
-    sine = (20000 * np.sin(2 * np.pi * t / 80)).astype(np.int64)
-    _, _, _, full_table = _decode_wav_generic(
-        _wav(7, 1, 8000, 8, bytes(range(256)))
-    )
-    table16 = full_table * 32768
-    codes = np.abs(sine[:, None] - table16[None, :]).argmin(axis=1).astype(np.uint8)
-    _, _, n, x = _decode_wav_generic(_wav(7, 1, 8000, 8, codes.tobytes()))
-    rms_in = np.sqrt(np.mean((sine / 32768.0) ** 2))
-    rms_out = np.sqrt(np.mean(x**2))
-    assert abs(rms_out - rms_in) / rms_in < 0.01
-
-    # fact-chunk trim and malformed tags stay loud
-    _, _, n, _ = _decode_wav_generic(_wav(1, 1, 8000, 8, bytes(20), fact=15))
-    assert n == 15
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="tag"):
-        _decode_wav_generic(_wav(0x55, 1, 8000, 0, bytes(8)))  # MP3: honest seam
-
-
-def test_wav_generic_through_audio_features(spark):
-    """e2e: a µ-law clip and a 24-bit PCM clip flow through
-    extract_audio_features' fallback chain next to a plain PCM16 one;
-    a garbage row dead-letters alone (S9)."""
-    import numpy as np
-
-    from french_admin_etl_spark.operators.multimodal import extract_audio_features
-
-    rng = np.random.RandomState(4)
-    pcm16 = (rng.randint(-30000, 30000, 400)).astype("<i2")
-    import struct as _s
-    wav16 = _wav(1, 1, 8000, 16, pcm16.tobytes())
-    v24 = rng.randint(-(1 << 23), 1 << 23, 300)
-    wav24 = _wav(1, 1, 8000, 24, b"".join(int(q).to_bytes(3, "little", signed=True) for q in v24))
-    ulaw = _wav(7, 1, 8000, 8, rng.randint(0, 256, 200).astype(np.uint8).tobytes())
-    rows = [
-        (1, "audio", bytearray(wav16)),
-        (2, "audio", bytearray(wav24)),
-        (3, "audio", bytearray(ulaw)),
-        (4, "audio", bytearray(b"RIFFjunk")),
-    ]
-    df = spark.createDataFrame(rows, "media_id long, kind string, payload binary")
-    got = {r["media_id"]: r for r in extract_audio_features(df).collect()}
-    assert got[1]["err"] is None and got[1]["n_frames"] == 400
-    assert got[2]["err"] is None and got[2]["n_frames"] == 300
-    assert got[3]["err"] is None and got[3]["n_frames"] == 200
-    assert all(got[i]["rms_segments"] is not None for i in (1, 2, 3))
-    assert got[4]["err"] is not None
-
-
-def _ms_adpcm_encode(x, rate, nch, block_align=256):
-    """From-scratch MS ADPCM encoder for round-trip testing: per block
-    pick a predictor index (rotating, to exercise the whole coefficient
-    table), quantize nibbles against the SAME reconstruction the decoder
-    runs, return (wav_bytes, the encoder's own reconstruction) — the
-    codec is lossy, so bit-exactness is against the reconstruction."""
-    import struct
-
-    import numpy as np
-
-    from french_admin_etl_spark.operators.multimodal import (
-        _MS_ADPCM_ADAPT,
-        _MS_ADPCM_COEFFS,
-    )
-
-    x = np.asarray(x, dtype=np.int64).reshape(-1, nch)
-    spb = 2 + (block_align - 7 * nch) * 2 // nch  # samples per block per channel
-    data = bytearray()
-    recon = []
-    for b0 in range(0, len(x), spb):
-        blk = x[b0 : b0 + spb]
-        if len(blk) < 2:
-            break
-        pi = (b0 // spb) % len(_MS_ADPCM_COEFFS)
-        c1, c2 = _MS_ADPCM_COEFFS[pi]
-        delta = [64] * nch
-        s2 = [int(blk[0][c]) for c in range(nch)]
-        s1 = [int(blk[1][c]) for c in range(nch)]
-        out = bytearray(bytes([pi] * nch))
-        for c in range(nch):
-            out += struct.pack("<h", delta[c])
-        for c in range(nch):
-            out += struct.pack("<h", s1[c])
-        for c in range(nch):
-            out += struct.pack("<h", s2[c])
-        rec_blk = [[s2[c], s1[c]] for c in range(nch)]
-        nibs = []
-        for i in range(2, spb):
-            row = blk[i] if i < len(blk) else blk[-1]  # pad tail w/ last
-            for c in range(nch):
-                acc = s1[c] * c1 + s2[c] * c2
-                pred = acc // 256 if acc >= 0 else -((-acc) // 256)  # C trunc
-                q = int(round((int(row[c]) - pred) / delta[c]))
-                q = max(-8, min(7, q))
-                nib = q + 16 if q < 0 else q
-                smp = pred + q * delta[c]
-                smp = max(-32768, min(32767, smp))
-                rec_blk[c].append(smp)
-                s2[c], s1[c] = s1[c], smp
-                delta[c] = max(16, (_MS_ADPCM_ADAPT[nib] * delta[c]) >> 8)
-                nibs.append(nib)
-        for j in range(0, len(nibs), 2):
-            hi = nibs[j]
-            lo = nibs[j + 1] if j + 1 < len(nibs) else 0
-            out.append((hi << 4) | lo)
-        assert len(out) == block_align, (len(out), block_align)
-        data += out
-        recon.append(np.array(rec_blk).T)  # (spb, nch)
-    import numpy as np
-
-    recon = np.concatenate(recon)
-    wav = _wav(2, nch, rate, 4, bytes(data), fact=len(recon))
-    # patch block_align into the fmt chunk (bytes 12-14 of its body)
-    i = wav.index(b"fmt ") + 8
-    wav = wav[: i + 12] + block_align.to_bytes(2, "little") + wav[i + 14 :]
-    return wav, recon
-
-
-def test_ms_adpcm_roundtrip():
-    """MS ADPCM (WAV tag 2, round 5): mono and stereo decode bit-exactly
-    against the test encoder's own reconstruction across multiple blocks
-    (rotating predictor indices exercise all 7 coefficient pairs);
-    malformed predictor index raises."""
-    import numpy as np
-
-    from french_admin_etl_spark.operators.multimodal import _decode_wav_generic
-
-    rng = np.random.RandomState(6)
-    t = np.arange(3000)
-    mono = (
-        9000 * np.sin(2 * np.pi * t / 50) + rng.randint(-800, 800, len(t))
-    ).astype(np.int64)
-    wav, recon = _ms_adpcm_encode(mono, 8000, 1, block_align=128)
-    nch, rate, n, got = _decode_wav_generic(wav)
-    assert (nch, rate) == (1, 8000) and n == len(recon)
-    assert np.array_equal((got * 32768).astype(np.int64), recon[:, 0])
-    # companding quality sanity: reconstruction tracks the source
-    assert np.sqrt(np.mean((recon[: len(mono), 0] - mono[:n]) ** 2)) < 600
-
-    stereo = np.stack(
-        [mono, (7000 * np.cos(2 * np.pi * t / 37)).astype(np.int64)], axis=1
-    )
-    wav2, recon2 = _ms_adpcm_encode(stereo.reshape(-1), 16000, 2, block_align=256)
-    nch, rate, n, got = _decode_wav_generic(wav2)
-    assert (nch, rate) == (2, 16000) and n == len(recon2)
-    assert np.allclose(got, recon2.mean(axis=1) / 32768.0)
-
-    import pytest as _pytest
-
-    bad = bytearray(wav)
-    bad[bad.index(b"data") + 8] = 9  # predictor index 9 > 6
-    with _pytest.raises(ValueError, match="predictor"):
-        _decode_wav_generic(bytes(bad))
-
-
 def test_bmp_subbyte_palette_and_rle8():
     """Round 5 BMP surface: 1/4-bit palette rows (MSB-first packing) and
     BI_RLE8 compression (runs, end-of-line, delta skip, absolute mode,
@@ -1439,67 +1016,6 @@ def test_bmp_subbyte_palette_and_rle8():
     # truncated RLE (no end-of-bitmap) raises
     with _pytest.raises(ValueError, match="truncated|bounds"):
         decode_image(hdr(8, 3, 8, 1, 256, pal8) + bytes([3, 7]))
-
-
-def test_ms_adpcm_predictor_truncates_toward_zero():
-    """Round-5 review regression: the MS ADPCM predictor divides the
-    coefficient sum by 256 C-style (truncation toward zero, per the
-    Microsoft reference decode), not Python floor. Anchor block:
-    predictor 4 (c1=240, c2=0) with s1=-1 gives acc=-240 — truncation
-    predicts 0 where floor predicted -1, and the error would feed back
-    through the history."""
-    import struct
-
-    import numpy as np
-
-    from french_admin_etl_spark.operators.multimodal import _decode_wav_generic
-
-    block = bytes([4]) + struct.pack("<hhh", 16, -1, 0) + b"\x00"  # 8 bytes
-    wav = _wav(2, 1, 8000, 4, block)
-    i = wav.index(b"fmt ") + 8
-    wav = wav[: i + 12] + (8).to_bytes(2, "little") + wav[i + 14 :]
-    nch, rate, n, mono = _decode_wav_generic(wav)
-    assert (nch, rate, n) == (1, 8000, 4)
-    # samples: s2=0, s1=-1, then two zero nibbles -> trunc predicts 0, 0
-    assert np.allclose(mono * 32768.0, [0.0, -1.0, 0.0, 0.0])
-
-
-def test_ima_adpcm_extensible_header():
-    """Round-5 review regression: WAVE_FORMAT_EXTENSIBLE-wrapped IMA
-    ADPCM decodes — the dedicated block decoder resolves the real tag
-    from the SubFormat GUID itself instead of rejecting tag 0xFFFE after
-    the generic path already resolved it."""
-    import struct
-
-    import numpy as np
-
-    from french_admin_etl_spark.operators.multimodal import _decode_wav_generic
-
-    rng = np.random.default_rng(9)
-    base = np.clip(
-        6000 * np.sin(np.arange(1200) / 11.0) + rng.integers(-500, 500, 1200),
-        -32768, 32767,
-    ).astype(np.int64)
-    wav, recon = _ima_adpcm_encode(base.reshape(-1, 1), 8000, 1)
-    plain = _decode_wav_generic(wav)
-
-    # re-wrap the fmt chunk body as extensible: tag 0xFFFE + cbSize 22 +
-    # valid-bits/channel-mask + SubFormat GUID led by the real tag
-    i = wav.index(b"fmt ")
-    ln = int.from_bytes(wav[i + 4 : i + 8], "little")
-    body = wav[i + 8 : i + 8 + ln]
-    ext = (
-        struct.pack("<H", 0xFFFE) + body[2:16]
-        + struct.pack("<HHI", 22, 4, 0)
-        + (0x11).to_bytes(2, "little") + bytes(14)
-    )
-    wrapped = (
-        wav[:i] + b"fmt " + len(ext).to_bytes(4, "little") + ext
-        + wav[i + 8 + ln :]
-    )
-    got = _decode_wav_generic(wrapped)
-    assert got[:3] == plain[:3]
-    assert np.array_equal(got[3], plain[3])
 
 
 def test_pnm_sub255_maxval_rescales():
@@ -1674,180 +1190,6 @@ def test_pivot_seqless_null_write_wins(spark):
     ).coalesce(1)
     out = pivot_last_write_wins(df, ["grp"], "p", ["a"], "v").collect()[0]
     assert out["a"] is None
-
-
-def _f80_bytes(rate: float) -> bytes:
-    """Encode a positive rate as the 80-bit extended float COMM carries."""
-    import math
-
-    if rate == 0:
-        return bytes(10)
-    m, e = math.frexp(rate)  # rate = m * 2^e with m in [0.5, 1)
-    mant = int(m * (1 << 64))
-    return (e - 1 + 16383).to_bytes(2, "big") + mant.to_bytes(8, "big")
-
-
-def _au(enc, nch, rate, data, size=None):
-    import struct
-
-    return b".snd" + struct.pack(
-        ">IIIII", 24, len(data) if size is None else size, enc, rate, nch
-    ) + data
-
-
-def _iff_chunk(cid, body):
-    return cid + len(body).to_bytes(4, "big") + body + (b"\x00" if len(body) & 1 else b"")
-
-
-def _aiff(nch, n_frames, bits, rate, data, comp=None, ssnd_off=0):
-    import struct
-
-    comm = struct.pack(">hIh", nch, n_frames, bits) + _f80_bytes(rate)
-    form_type = b"AIFF"
-    if comp is not None:
-        form_type = b"AIFC"
-        comm += comp + b"\x00\x00"  # empty pstring codec name, even-padded
-    ssnd = struct.pack(">II", ssnd_off, 0) + bytes(ssnd_off) + data
-    body = form_type + _iff_chunk(b"COMM", comm) + _iff_chunk(b"SSND", ssnd)
-    return b"FORM" + len(body).to_bytes(4, "big") + body
-
-
-def test_au_decode_formats():
-    """Round 5: Sun/NeXT AU — µ-law/A-law anchors shared with the WAV
-    G.711 table, big-endian PCM widths, float, unknown-size header."""
-    import numpy as np
-    import pytest as _pytest
-
-    from french_admin_etl_spark.operators.multimodal import _decode_au
-
-    rng = np.random.RandomState(3)
-
-    # µ-law anchors ride the shared G.711 table
-    _, _, _, x = _au_x = _decode_au(_au(1, 1, 8000, bytes([0xFF, 0x7F, 0x00, 0x80])))
-    assert np.allclose(x * 32768, [0, 0, -32124, 32124])
-    _, _, _, x = _decode_au(_au(27, 1, 8000, bytes([0xD5, 0x55, 0xAA, 0x2A])))
-    assert np.allclose(x * 32768, [8, -8, 32256, -32256])
-
-    # 16-bit BE PCM stereo: exact, channel-meaned
-    v = rng.randint(-30000, 30000, (60, 2))
-    nch, rate, n, x = _decode_au(_au(3, 2, 44100, v.astype(">i2").tobytes()))
-    assert (nch, rate, n) == (2, 44100, 60)
-    assert np.allclose(x, v.mean(axis=1) / 32768.0)
-
-    # 24-bit BE PCM with negatives
-    v24 = rng.randint(-(1 << 23), 1 << 23, 40)
-    raw = b"".join(int(q).to_bytes(3, "big", signed=True) for q in v24)
-    _, _, n, x = _decode_au(_au(4, 1, 8000, raw))
-    assert n == 40 and np.allclose(x, v24 / float(1 << 23))
-
-    # float32 with the unknown-size sentinel (rest of file)
-    f32 = (rng.rand(25) * 2 - 1).astype(">f4")
-    _, _, n, x = _decode_au(_au(6, 1, 16000, f32.tobytes(), size=0xFFFFFFFF))
-    assert n == 25 and np.allclose(x, f32.astype(np.float64))
-
-    # signed 8-bit linear (encoding 2) — AU's 8-bit is SIGNED, unlike WAV
-    v8 = rng.randint(-128, 128, 30).astype(np.int8)
-    _, _, n, x = _decode_au(_au(2, 1, 8000, v8.tobytes()))
-    assert n == 30 and np.allclose(x, v8.astype(np.float64) / 128.0)
-
-    with _pytest.raises(ValueError, match="encoding 23"):
-        _decode_au(_au(23, 1, 8000, bytes(16)))  # G.721 ADPCM: honest seam
-    with _pytest.raises(ValueError, match="offset"):
-        _decode_au(b".snd" + (10).to_bytes(4, "big") + bytes(20))
-
-
-def test_aiff_decode_formats():
-    """Round 5: AIFF/AIFC — 80-bit extended sample rate, BE PCM,
-    little-endian 'sowt', float, G.711, SSND offset preamble,
-    frame-count trim; compressed AIFC codecs stay the seam."""
-    import numpy as np
-    import pytest as _pytest
-
-    from french_admin_etl_spark.operators.multimodal import _decode_aiff, _f80
-
-    rng = np.random.RandomState(7)
-
-    # the 80-bit rate field round-trips common and odd rates exactly
-    for r in (8000, 11025, 22050, 44100, 48000, 96000):
-        assert _f80(_f80_bytes(r)) == r
-
-    # plain AIFF 16-bit BE PCM stereo
-    v = rng.randint(-30000, 30000, (50, 2))
-    nch, rate, n, x = _decode_aiff(_aiff(2, 50, 16, 44100, v.astype(">i2").tobytes()))
-    assert (nch, rate, n) == (2, 44100, 50)
-    assert np.allclose(x, v.mean(axis=1) / 32768.0)
-
-    # AIFC sowt: the SAME samples little-endian decode identically
-    _, _, n, x2 = _decode_aiff(
-        _aiff(2, 50, 16, 44100, v.astype("<i2").tobytes(), comp=b"sowt")
-    )
-    assert n == 50 and np.allclose(x2, x)
-
-    # 24-bit BE PCM + SSND alignment preamble (offset skipped)
-    v24 = rng.randint(-(1 << 23), 1 << 23, 40)
-    raw = b"".join(int(q).to_bytes(3, "big", signed=True) for q in v24)
-    _, _, n, x = _decode_aiff(_aiff(1, 40, 24, 8000, raw, ssnd_off=4))
-    assert n == 40 and np.allclose(x, v24 / float(1 << 23))
-
-    # AIFC fl32 and G.711 alaw anchors
-    f32 = (rng.rand(30) * 2 - 1).astype(">f4")
-    _, _, n, x = _decode_aiff(_aiff(1, 30, 32, 48000, f32.tobytes(), comp=b"fl32"))
-    assert n == 30 and np.allclose(x, f32.astype(np.float64))
-    _, _, _, x = _decode_aiff(
-        _aiff(1, 4, 16, 8000, bytes([0xD5, 0x55, 0xAA, 0x2A]), comp=b"alaw")
-    )
-    assert np.allclose(x * 32768, [8, -8, 32256, -32256])
-
-    # COMM frame count trims trailing pad frames
-    _, _, n, _ = _decode_aiff(_aiff(1, 15, 16, 8000, bytes(2 * 20)))
-    assert n == 15
-
-    with _pytest.raises(ValueError, match="ima4"):
-        _decode_aiff(_aiff(1, 8, 16, 8000, bytes(64), comp=b"ima4"))
-
-
-def test_au_aiff_through_audio_features(spark):
-    """e2e: AU and AIFF payloads flow through extract_audio_features'
-    magic dispatch beside WAV; a corrupt FORM dead-letters alone (S9)."""
-    import numpy as np
-
-    from french_admin_etl_spark.operators.multimodal import extract_audio_features
-
-    rng = np.random.RandomState(11)
-    au = _au(3, 1, 8000, rng.randint(-30000, 30000, 300).astype(">i2").tobytes())
-    aiff = _aiff(1, 250, 16, 22050, rng.randint(-30000, 30000, 250).astype(">i2").tobytes())
-    rows = [
-        (1, "audio", bytearray(au)),
-        (2, "audio", bytearray(aiff)),
-        (3, "audio", bytearray(b"FORM\x00\x00\x00\x04AIFF")),
-    ]
-    df = spark.createDataFrame(rows, "media_id long, kind string, payload binary")
-    got = {r["media_id"]: r for r in extract_audio_features(df).collect()}
-    assert got[1]["err"] is None and got[1]["n_frames"] == 300
-    assert got[1]["sample_rate"] == 8000
-    assert got[2]["err"] is None and got[2]["n_frames"] == 250
-    assert got[2]["sample_rate"] == 22050
-    assert got[3]["err"] is not None and "AIFF" in got[3]["err"]
-
-
-def test_au_aiff_rate_bounds_and_rounding():
-    """Review findings: sample rates flow into an int32 Arrow column —
-    an out-of-int32 header rate must dead-letter THIS row (ValueError),
-    not crash the whole batch; fractional AIFF rates (classic-Mac
-    22254.5454 Hz) round to the nearest int instead of relying on the
-    Arrow cast's silent truncation."""
-    import numpy as np
-    import pytest as _pytest
-
-    from french_admin_etl_spark.operators.multimodal import _decode_aiff, _decode_au
-
-    pcm = np.zeros(40, dtype=">i2").tobytes()
-    with _pytest.raises(ValueError, match="malformed"):
-        _decode_au(_au(3, 1, 3_000_000_000, pcm))
-    nch, rate, n, _ = _decode_aiff(_aiff(1, 40, 16, 22254.5454, pcm))
-    assert rate == 22255 and isinstance(rate, int)
-    with _pytest.raises(ValueError, match="malformed"):
-        _decode_aiff(_aiff(1, 40, 16, 5e9, pcm))
 
 
 def test_ansi_poison_rows_zero_norm_short_vector_emoji(spark):
