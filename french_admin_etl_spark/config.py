@@ -36,13 +36,9 @@ class EngineConfig:
     driver_memory: str = field(default="8g", metadata={"env": "DRIVER_MEM"})
     # micro-batch sizing (reference: ETL_BATCH_SIZE)
     batch_lsns: int = field(default=1_000_000, metadata={"env": "BATCH_LSNS"})
-    batch_events: int = field(default=1_000_000, metadata={"env": "BATCH_EVENTS"})
     # table layout
     num_buckets: int = field(default=32, metadata={"env": "NUM_BUCKETS"})
     write_mode: str = field(default="mor", metadata={"env": "WRITE_MODE"})
-    compact_max_delta_files: int = field(
-        default=8, metadata={"env": "COMPACT_MAX_DELTA_FILES"}
-    )
     # job identity / paths (reference: database coordinates)
     writer_id: str | None = field(default=None, metadata={"env": "WRITER_ID"})
     log_dir: str | None = field(default=None, metadata={"env": "LOG_DIR"})
@@ -61,7 +57,7 @@ class EngineConfig:
             # 0 is the "unset → derive from the machine" sentinel
             if getattr(self, name) < 0:
                 raise ConfigError(f"{name} must be >= 0, got {getattr(self, name)}")
-        for name in ("batch_lsns", "batch_events", "num_buckets", "compact_max_delta_files"):
+        for name in ("batch_lsns", "num_buckets"):
             # 0 is NOT a sentinel here: batch_lsns=0 spins run_incremental
             # forever on empty windows, num_buckets=0 makes pmod null
             if getattr(self, name) < 1:
@@ -106,9 +102,6 @@ class EngineConfig:
             shuffle_partitions=self.shuffle_partitions or None,
             driver_memory=self.driver_memory,
         )
-
-    def table_properties(self) -> dict:
-        return {"compact.max-delta-files": self.compact_max_delta_files}
 
 
 def _parse(var: str, raw: str, ftype: str):

@@ -8,13 +8,13 @@ typed metadata, images featurized via Arrow-batched ``mapInPandas``.
 - ``extract_image_features`` decodes image payloads with no image
   library: PPM/PGM/PNM, BMP (incl. palette and RLE), ICO, PNG (all
   filters, depths, palette, Adam7), GIF (from-scratch LZW, interlace),
-  TGA (``operators/tga.py``), TIFF (``operators/tiff.py``) and every
-  T.81 JPEG coding process (``operators/jpeg.py``). The feature is a
-  real nearest-neighbour 8x8 grayscale thumbnail. A row whose codec is
-  unsupported or whose payload is corrupt gets a per-row ``err`` instead
-  of failing the batch (the engine's S9 dead-letter rule applied to
-  media). ``decode_stub=True`` swaps in a deterministic fake decode so
-  the pipeline shape is exercised without fixtures.
+  TGA (``operators/tga.py``) and TIFF (``operators/tiff.py``). JPEG is
+  not decoded. The feature is a real nearest-neighbour 8x8 grayscale
+  thumbnail. A row whose codec is unsupported or whose payload is
+  corrupt gets a per-row ``err`` instead of failing the batch (the
+  engine's S9 dead-letter rule applied to media). ``decode_stub=True``
+  swaps in a deterministic fake decode so the pipeline shape is
+  exercised without fixtures.
 
 Binary payloads never leave the executor: ``mapInPandas`` streams Arrow
 record batches, so a 10 MB image is one cell in one batch, not a row
@@ -228,12 +228,6 @@ def decode_image(payload: bytes):
         return _decode_png(payload)
     if payload[:6] in (b"GIF87a", b"GIF89a"):
         return _decode_gif(payload)
-    if payload[:2] == b"\xff\xd8":
-        # baseline JPEG, from-scratch (operators/jpeg.py): the luma plane
-        # IS the BT.601 gray the other branches compute from RGB
-        from french_admin_etl_spark.operators.jpeg import decode_jpeg_gray
-
-        return decode_jpeg_gray(payload)
     if payload[:4] in (b"II*\x00", b"MM\x00*"):
         # baseline TIFF, from-scratch (operators/tiff.py): strips or
         # tiles, none / LZW / PackBits, gray / RGB / palette, predictor

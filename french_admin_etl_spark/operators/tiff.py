@@ -3,20 +3,17 @@
 Covers the baseline-TIFF surface a scraped-corpus pipeline actually
 meets: both byte orders (``II``/``MM``), strip- AND tile-organised
 images (tags 273/279 or 322-325), compression 1 (none), 5 (LZW),
-8/32946 (Deflate — both the registered and the original tag value),
-32773 (PackBits) and 7 (new-style JPEG-in-TIFF per TIFF Technical
-Note 2: per-segment JPEG datastreams, tag-347 JPEGTables abbreviated
-streams, photometric 6 YCbCr / 1 gray / 2 RGB — routed through the
-in-house ``operators/jpeg.py`` T.81 decoder), photometric 0/1
-(grayscale, min-is-white / min-is-black), 2 (RGB, extra samples
-ignored) and 3 (palette, 16-bit ColorMap), bits-per-sample 1/4/8/16,
-predictor 2 (horizontal differencing, 8- and 16-bit samples; restarts
-per tile since tiles compress independently), and both planar
-configurations (chunky and §14 plane-major separate-strip planes).
-Planar-2 WITH tiles and the spec-retracted old-style JPEG
-(compression 6) raise ``NotImplementedError`` — the remaining (and in
-practice unused) corners, dead-lettered per row under the engine's S9
-contract like every other codec seam.
+8/32946 (Deflate — both the registered and the original tag value) and
+32773 (PackBits), photometric 0/1 (grayscale, min-is-white /
+min-is-black), 2 (RGB, extra samples ignored) and 3 (palette, 16-bit
+ColorMap), bits-per-sample 1/4/8/16, predictor 2 (horizontal
+differencing, 8- and 16-bit samples; restarts per tile since tiles
+compress independently), and both planar configurations (chunky and
+§14 plane-major separate-strip planes). Planar-2 WITH tiles, JPEG
+compression (6, the spec-retracted old style, and 7, the new style of
+TIFF Technical Note 2) and photometric 6 (YCbCr) raise
+``NotImplementedError`` — codec seams, dead-lettered per row under the
+engine's S9 contract like every other unsupported codec.
 
 The LZW variant here is the TIFF one, which differs from GIF's in all
 three conventions: codes pack MSB-first (GIF: LSB-first), the alphabet
@@ -27,7 +24,7 @@ entry 510, i.e. when the table length reaches 2**width - 1, not
 2**width). Both the bump rule and the MSB packing are pinned by
 hand-assembled bitstream tests in ``tests/test_tiff.py`` independently
 of the mirror encoder — round-trips alone cannot catch a convention
-error that both sides share (the repo's lossless-JPEG lesson).
+error that both sides share.
 
 Reference parity note: the reference engine has no media path at all —
 this module belongs to the training-data extension surface
@@ -201,100 +198,6 @@ def _decompress(chunk: bytes, want: int, compression: int) -> bytes:
     raise NotImplementedError(f"TIFF compression {compression}")
 
 
-def _decode_tiff_jpeg(
-    payload: bytes,
-    tags: dict,
-    w: int,
-    h: int,
-    photometric: int,
-    tiled: bool,
-    offsets: list,
-    counts: list,
-    tw: int | None,
-    tl: int | None,
-    rows_per_strip: int,
-):
-    """New-style JPEG-in-TIFF (compression 7, TIFF Technical Note 2):
-    every strip/tile is a standalone JPEG datastream of that segment's
-    dimensions (encoders may MCU-pad — decoded segments only need to be
-    at least as large as the region they cover; the excess is cropped at
-    paste, like ordinary edge tiles). When tag 347 (JPEGTables) is
-    present, segments are ABBREVIATED streams: the shared
-    ``SOI tables EOI`` stream's body is spliced between each segment's
-    SOI and its frame markers before decoding. Photometric 6 (YCbCr) and
-    1/0 (grayscale) take the luma plane — exactly the BT.601 gray the
-    other branches compute; photometric 2 (RGB-coded JPEG, no color
-    transform) needs three full-resolution components and mixes 601
-    explicitly, rescaling the frame's native range (12-bit frames are
-    legal here). Decoding runs through the in-house T.81 decoder in
-    ``operators/jpeg.py`` — no new entropy code in this module."""
-    import numpy as np
-
-    from french_admin_etl_spark.operators.jpeg import decode_jpeg, decode_jpeg_gray
-
-    tables = bytes(tags[347]) if 347 in tags else b""
-    if tables and (tables[:2] != b"\xff\xd8" or tables[-2:] != b"\xff\xd9"):
-        raise ValueError("bad JPEGTables stream (expected SOI ... EOI)")
-
-    def gray_of(blob: bytes):
-        if tables and blob[:2] == b"\xff\xd8":
-            blob = tables[:-2] + blob[2:]
-        if photometric == 2:
-            cw, ch, planes, prec = decode_jpeg(blob, with_precision=True)
-            if len(planes) < 3 or not (
-                planes[0].shape == planes[1].shape == planes[2].shape
-            ):
-                raise ValueError(
-                    "TIFF RGB JPEG segment needs 3 full-resolution components"
-                )
-            scale = 255.0 / float((1 << prec) - 1)
-            r, g, b = (p * scale for p in planes[:3])
-            return cw, ch, 0.299 * r + 0.587 * g + 0.114 * b
-        cw, ch, gray = decode_jpeg_gray(blob)
-        if photometric == 0:  # min-is-white
-            gray = 255.0 - gray
-        return cw, ch, gray
-
-    out = np.zeros((h, w), np.float64)
-    if tiled:
-        if tw <= 0 or tl <= 0:
-            raise ValueError(f"bad TIFF tile size {tw}x{tl}")
-        across = (w + tw - 1) // tw
-        down = (h + tl - 1) // tl
-        if len(offsets) < across * down:
-            raise ValueError(f"TIFF has {len(offsets)} tiles, needs {across * down}")
-        for ty in range(down):
-            for tx in range(across):
-                so = offsets[ty * across + tx]
-                sc = counts[ty * across + tx]
-                if so + sc > len(payload):
-                    raise ValueError("TIFF tile out of bounds")
-                cw, ch, gray = gray_of(payload[so : so + sc])
-                need_h = min(tl, h - ty * tl)
-                need_w = min(tw, w - tx * tw)
-                if ch < need_h or cw < need_w:
-                    raise ValueError("TIFF JPEG tile smaller than its grid cell")
-                out[ty * tl : ty * tl + need_h, tx * tw : tx * tw + need_w] = gray[
-                    :need_h, :need_w
-                ]
-    else:
-        rows_done = 0
-        for so, sc in zip(offsets, counts):
-            n_rows = min(rows_per_strip, h - rows_done)
-            if n_rows <= 0:
-                break
-            if so + sc > len(payload):
-                raise ValueError("TIFF strip out of bounds")
-            cw, ch, gray = gray_of(payload[so : so + sc])
-            if ch < n_rows or cw < w:
-                raise ValueError("TIFF JPEG strip smaller than its row span")
-            out[rows_done : rows_done + n_rows] = gray[:n_rows, :w]
-            rows_done += n_rows
-        if rows_done < h:
-            raise ValueError(f"TIFF strips cover {rows_done} of {h} rows")
-    return w, h, out
-
-
 def _unpack_samples(raw: bytes, rows: int, wpx: int, spp: int, bits: int, np_u2):
     """Byte-aligned rows of packed samples → (rows, wpx, spp) int64."""
     import numpy as np
@@ -363,18 +266,6 @@ def decode_tiff(payload: bytes):
     photometric = tags.get(262, [1])[0]
     predictor = tags.get(317, [1])[0]
     rows_per_strip = tags.get(278, [2**32 - 1])[0] or 2**32 - 1
-    if compression == 7:
-        # new-style JPEG-in-TIFF: segments are whole JPEG datastreams, so
-        # bits/predictor are the embedded frames' business, not this
-        # module's sample-unpack path
-        if photometric not in (0, 1, 2, 6):
-            raise NotImplementedError(f"JPEG-in-TIFF photometric {photometric}")
-        if planar != 1:
-            raise NotImplementedError("planar JPEG-in-TIFF")
-        return _decode_tiff_jpeg(
-            payload, tags, w, h, photometric, tiled, offsets, counts,
-            tw if tiled else None, tl if tiled else None, rows_per_strip,
-        )
     if bits not in (1, 4, 8, 16):
         raise NotImplementedError(f"TIFF bits-per-sample {bits}")
     if bits < 8 and spp != 1:

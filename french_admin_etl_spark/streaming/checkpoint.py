@@ -54,6 +54,20 @@ class CheckpointStore:
             _fsync_dir(d)
 
 
+def _read_uid(uid_path: str) -> str:
+    """An existing ``engine_id``; an empty one is refused, not trusted:
+    every dir whose uid came back empty would share the fence namespace
+    "" and fence one stream's fresh epochs against another's."""
+    with open(uid_path) as fh:
+        uid = fh.read().strip()
+    if not uid:
+        raise ValueError(
+            f"{uid_path} is empty; remove it only if no fence was "
+            "recorded under it"
+        )
+    return uid
+
+
 def stream_fence_uid(checkpoint_dir: str) -> str:
     """Identity of a Structured Streaming checkpoint dir, minted once and
     persisted in ``<dir>/engine_id``.
@@ -70,8 +84,7 @@ def stream_fence_uid(checkpoint_dir: str) -> str:
     os.makedirs(checkpoint_dir, exist_ok=True)
     uid_path = os.path.join(checkpoint_dir, "engine_id")
     if os.path.exists(uid_path):
-        with open(uid_path) as fh:
-            return fh.read().strip()
+        return _read_uid(uid_path)
     # exclusive-create protocol (same as the table's commit): two drivers
     # racing on a fresh dir must agree on ONE uid — a write-then-replace
     # here would let the loser keep fencing under a uid that was never
@@ -90,8 +103,7 @@ def stream_fence_uid(checkpoint_dir: str) -> str:
     try:
         os.link(tmp, uid_path)
     except FileExistsError:
-        with open(uid_path) as fh:
-            uid = fh.read().strip()
+        uid = _read_uid(uid_path)
     finally:
         os.unlink(tmp)
     _fsync_dir(checkpoint_dir)

@@ -3,6 +3,8 @@
 import os
 import stat
 
+import pytest
+
 from french_admin_etl_spark.streaming import checkpoint
 
 
@@ -38,3 +40,27 @@ def test_stream_fence_uid_fsyncs_tmp_before_link(tmp_path, monkeypatch):
         assert fh.read() == uid != ""
     assert checkpoint.stream_fence_uid(d) == uid
     assert os.listdir(d) == ["engine_id"]
+
+
+def test_stream_fence_uid_refuses_empty_engine_id(tmp_path, monkeypatch):
+    """An ``engine_id`` that exists but is empty (a power loss under the
+    pre-fsync publish) is refused on both read paths: trusting it would
+    put every such dir into the one fence namespace ""."""
+    d = tmp_path / "emptied"
+    d.mkdir()
+    (d / "engine_id").write_text(" \n")
+    with pytest.raises(ValueError, match="engine_id"):
+        checkpoint.stream_fence_uid(str(d))
+
+    # the loser of the exclusive-create race re-reads the winner's file
+    real_link = os.link
+
+    def racing_link(src, dst):
+        open(dst, "w").close()  # the other minter's file, left empty
+        real_link(src, dst)
+
+    monkeypatch.setattr(checkpoint.os, "link", racing_link)
+    d = tmp_path / "raced"
+    with pytest.raises(ValueError, match="engine_id"):
+        checkpoint.stream_fence_uid(str(d))
+    assert os.listdir(d) == ["engine_id"]  # the tmp is still removed

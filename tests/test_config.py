@@ -14,7 +14,6 @@ def test_defaults_when_nothing_set():
     assert cfg.batch_lsns == 1_000_000
     assert cfg.num_buckets == 32
     assert cfg.write_mode == "mor"
-    assert cfg.compact_max_delta_files == 8
     assert cfg.writer_id is None and cfg.table_root is None
 
 
@@ -79,19 +78,11 @@ def test_negative_rejected():
         EngineConfig.load(environ={"SPARK_GRAFT_NUM_BUCKETS": "-1"}, dotenv_path="/x")
 
 
-def test_table_properties_roundtrip():
-    cfg = EngineConfig.load(
-        environ={"SPARK_GRAFT_COMPACT_MAX_DELTA_FILES": "3"}, dotenv_path="/x"
-    )
-    assert cfg.table_properties() == {"compact.max-delta-files": 3}
-
-
 def test_zero_batch_and_bucket_knobs_rejected():
     """Reviewer finding: batch_lsns=0 spins run_incremental forever on
     empty windows and num_buckets=0 makes pmod null — 0 is only a valid
     sentinel for the machine-derived knobs (workers/shuffle)."""
-    for var in ("BATCH_LSNS", "BATCH_EVENTS", "NUM_BUCKETS",
-                "COMPACT_MAX_DELTA_FILES"):
+    for var in ("BATCH_LSNS", "NUM_BUCKETS"):
         with pytest.raises(ConfigError):
             EngineConfig.load(environ={f"SPARK_GRAFT_{var}": "0"}, dotenv_path="/x")
     # machine-derived knobs keep 0 as "unset"

@@ -262,7 +262,6 @@ def _write_segments(tmp_root, ev: pd.DataFrame, n_segments: int):
     """Land the envelope log as LSN-ordered segment files with increasing
     mtimes (the WAL contract run_stream documents: a segment is sealed
     before the next is written — the file source then admits oldest-first)."""
-    import numpy as np
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -279,8 +278,12 @@ def _write_segments(tmp_root, ev: pd.DataFrame, n_segments: int):
             ("props", pa.string()),
         ]
     )
-    chunks = np.array_split(ev.sort_values("lsn").reset_index(drop=True), n_segments)
-    for i, chunk in enumerate(chunks):
+    ev = ev.sort_values("lsn").reset_index(drop=True)
+    # np.array_split's boundaries: the first len % n segments get one more row
+    q, r = divmod(len(ev), n_segments)
+    bounds = [i * q + min(i, r) for i in range(n_segments + 1)]
+    for i, (a, b) in enumerate(zip(bounds, bounds[1:])):
+        chunk = ev.iloc[a:b]
         p = os.path.join(log_dir, f"seg-{i:04d}.parquet")
         pq.write_table(pa.Table.from_pandas(chunk, schema=arrow_schema), p)
         os.utime(p, (1_700_000_000 + i, 1_700_000_000 + i))

@@ -54,3 +54,35 @@ def test_driver_contract_imports_and_registries_match():
         assert set(queries) == set(oracles)
         assert all(callable(q) for q in queries.values())
     assert len(entry.queries()) == 50
+
+
+def test_every_engine_config_field_is_read():
+    """A knob that is parsed and validated but never read does nothing
+    for the user who sets it. Every ``EngineConfig`` field must be read
+    as ``cfg.<field>`` in ``app.py`` or as ``self.<field>`` in an
+    ``EngineConfig`` method other than its parsing and validation."""
+    import dataclasses
+
+    from french_admin_etl_spark.config import EngineConfig
+
+    def loads(tree, owner):
+        return {
+            n.attr
+            for n in ast.walk(tree)
+            if isinstance(n, ast.Attribute)
+            and isinstance(n.ctx, ast.Load)
+            and isinstance(n.value, ast.Name)
+            and n.value.id == owner
+        }
+
+    read = loads(ast.parse((PKG.parent / "app.py").read_text()), "cfg")
+    config = ast.parse((PKG / "config.py").read_text())
+    for cls in config.body:
+        if isinstance(cls, ast.ClassDef) and cls.name == "EngineConfig":
+            for fn in cls.body:
+                if isinstance(fn, ast.FunctionDef) and fn.name not in (
+                    "__post_init__", "load"
+                ):
+                    read |= loads(fn, "self")
+    unread = [f.name for f in dataclasses.fields(EngineConfig) if f.name not in read]
+    assert unread == [], unread

@@ -212,8 +212,7 @@ def _tiff_write(
 def _tiff_container(blocks, entries, bo):
     """Serialize data blocks + IFD entries into a TIFF file. Offset tags
     (273/324) passed with values=None are patched to the blocks' actual
-    positions. Shared by the sample-packing writer above and the
-    JPEG-in-TIFF wrapper below."""
+    positions."""
 
     def b2(v):
         return int(v).to_bytes(2, bo)
@@ -248,61 +247,6 @@ def _tiff_container(blocks, entries, bo):
     ifd += b4(0)  # no next IFD
     magic = b"II*\x00" if bo == "little" else b"MM\x00*"
     return magic + b4(ifd_off) + b"".join(blocks) + bytes(ifd) + bytes(overflow)
-
-
-def _tiff_jpeg(blobs, w, h, photometric, rows_per_strip=None, tile=None,
-               tables=None, bo="little"):
-    """TIFF wrapper (compression 7) around pre-encoded JPEG segment
-    datastreams; optional tag-347 JPEGTables stream."""
-    spp = 3 if photometric in (2, 6) else 1
-    entries = [
-        (256, 3, [w]),
-        (257, 3, [h]),
-        (258, 3, [8] * spp),
-        (259, 3, [7]),
-        (262, 3, [photometric]),
-        (277, 3, [spp]),
-    ]
-    if tile:
-        entries += [
-            (322, 3, [tile[0]]),
-            (323, 3, [tile[1]]),
-            (324, 4, None),
-            (325, 4, [len(s) for s in blobs]),
-        ]
-    else:
-        entries += [
-            (273, 4, None),
-            (278, 3, [rows_per_strip or h]),
-            (279, 4, [len(s) for s in blobs]),
-        ]
-    if tables is not None:
-        entries.append((347, 7, list(tables)))
-    return _tiff_container(blobs, entries, bo)
-
-
-def _split_jpeg_tables(payload: bytes):
-    """Split an SOI..EOI JPEG into (tables_stream, abbreviated_stream):
-    DQT/DHT segments move to the tables stream, everything else (SOF,
-    DRI, SOS + entropy data) stays — the TechNote-2 JPEGTables layout."""
-    i = 2
-    tables = bytearray(b"\xff\xd8")
-    rest = bytearray(b"\xff\xd8")
-    while i + 4 <= len(payload):
-        assert payload[i] == 0xFF, "marker sync lost in test splitter"
-        m = payload[i + 1]
-        if m == 0xD9:
-            break
-        ln = int.from_bytes(payload[i + 2 : i + 4], "big")
-        seg = payload[i : i + 2 + ln]
-        (tables if m in (0xDB, 0xC4) else rest).extend(seg)
-        i += 2 + ln
-        if m == 0xDA:  # single-scan encoder: entropy data runs to EOI
-            rest += payload[i : len(payload) - 2]
-            break
-    tables += b"\xff\xd9"
-    rest += b"\xff\xd9"
-    return bytes(tables), bytes(rest)
 
 
 def _want_gray(samples, bits, photometric, colormap=None):
@@ -505,6 +449,14 @@ def test_tiff_error_paths():
     with pytest.raises(NotImplementedError, match="planar"):
         decode_tiff(planar_tiled)
 
+    # JPEG compression (7) and YCbCr without it are codec seams too
+    jpeg7 = _tiff_write(samples, 8, 1, 7, "little")
+    with pytest.raises(NotImplementedError, match="compression 7"):
+        decode_tiff(jpeg7)
+    ycbcr = _tiff_write(np.repeat(samples, 3, axis=2), 8, 6, 1, "little")
+    with pytest.raises(NotImplementedError, match="photometric 6"):
+        decode_tiff(ycbcr)
+
     with pytest.raises(ValueError):
         decode_tiff(b"II*\x00\x08\x00\x00")  # truncated header
     with pytest.raises(ValueError):
@@ -686,100 +638,3 @@ def test_tiff_deflate_roundtrip():
     bad = good[:10] + bytes([good[10] ^ 0xFF]) + good[11:]
     with pytest.raises(ValueError, match="deflate|short TIFF"):
         decode_tiff(bad)
-
-
-def test_tiff_jpeg_strips_gray_multi():
-    """JPEG-in-TIFF (compression 7): grayscale strips, each its own
-    SOI..EOI datastream; the last strip is shorter than rows_per_strip
-    and the 8-row strips exercise MCU-height cropping."""
-    from test_jpeg import _img, encode_jpeg
-
-    q1 = {0: np.ones((8, 8))}
-    img = _img(20, 24, seed=31)
-    blobs = [
-        encode_jpeg([img[y0 : y0 + 8]], 24, min(8, 20 - y0), [(1, 1)], [0], q1)
-        for y0 in (0, 8, 16)
-    ]
-    p = _tiff_jpeg(blobs, 24, 20, photometric=1, rows_per_strip=8)
-    dw, dh, gray = decode_image(p)
-    assert (dw, dh) == (24, 20)
-    assert np.max(np.abs(gray - img)) <= 2.0  # q=1: DCT rounding only
-
-
-def test_tiff_jpeg_ycbcr_and_rgb():
-    """Photometric 6 (YCbCr, the common camera layout): gray is the
-    luma plane directly. Photometric 2 (RGB-coded JPEG, no color
-    transform): gray is the explicit 601 mix of the three components."""
-    from test_jpeg import _img, encode_jpeg
-
-    y, cb, cr = _img(16, 24, 32), _img(8, 12, 33), _img(8, 12, 34)
-    q = {0: np.ones((8, 8)), 1: np.ones((8, 8))}
-    blob = encode_jpeg([y, cb, cr], 24, 16, [(2, 2), (1, 1), (1, 1)], [0, 1, 1], q)
-    dw, dh, gray = decode_image(_tiff_jpeg([blob], 24, 16, photometric=6))
-    assert (dw, dh) == (24, 16)
-    assert np.max(np.abs(gray - y)) <= 2.0
-
-    r, g, b = _img(16, 16, 35), _img(16, 16, 36), _img(16, 16, 37)
-    blob = encode_jpeg([r, g, b], 16, 16, [(1, 1)] * 3, [0, 0, 0],
-                       {0: np.ones((8, 8))})
-    dw, dh, gray = decode_image(_tiff_jpeg([blob], 16, 16, photometric=2))
-    assert (dw, dh) == (16, 16)
-    want = 0.299 * r + 0.587 * g + 0.114 * b
-    assert np.max(np.abs(gray - want)) <= 2.5
-
-    # YCbCr WITHOUT JPEG compression stays an honest seam
-    # (patch compression tag 259 SHORT value 7 -> 1)
-    p6 = _tiff_jpeg([blob], 16, 16, photometric=6)
-    at = p6.index(b"\x03\x01\x03\x00\x01\x00\x00\x00\x07\x00")
-    p6 = p6[: at + 8] + b"\x01\x00" + p6[at + 10 :]
-    with pytest.raises(NotImplementedError, match="photometric 6"):
-        decode_tiff(p6)
-
-
-def test_tiff_jpeg_tables_abbreviated():
-    """Tag-347 JPEGTables: the strip is an ABBREVIATED stream (no
-    DQT/DHT of its own) and decodes only through the tables splice;
-    without the tag the same strip must fail."""
-    from test_jpeg import _img, encode_jpeg
-
-    img = _img(16, 16, seed=38)
-    full = encode_jpeg([img], 16, 16, [(1, 1)], [0], {0: np.ones((8, 8))})
-    tables, abbrev = _split_jpeg_tables(full)
-    assert b"\xff\xdb" in tables and b"\xff\xdb" not in abbrev
-    dw, dh, gray = decode_image(
-        _tiff_jpeg([abbrev], 16, 16, photometric=1, tables=tables)
-    )
-    assert (dw, dh) == (16, 16)
-    assert np.max(np.abs(gray - img)) <= 2.0
-    # the abbreviated strip alone has no entropy tables -> decode fails
-    with pytest.raises(Exception):
-        decode_tiff(_tiff_jpeg([abbrev], 16, 16, photometric=1))
-    # malformed tables stream (no SOI) rejected up front
-    with pytest.raises(ValueError, match="JPEGTables"):
-        decode_tiff(_tiff_jpeg([abbrev], 16, 16, photometric=1,
-                               tables=tables[2:]))
-
-
-def test_tiff_jpeg_tiled_and_error_paths():
-    """Tiled JPEG-in-TIFF: full-size edge tiles cropped at paste; a
-    strip whose embedded frame is smaller than its row span errors."""
-    from test_jpeg import _img, encode_jpeg
-
-    q1 = {0: np.ones((8, 8))}
-    img = _img(20, 24, seed=39)
-    pad = np.zeros((32, 32))
-    pad[:20, :24] = img
-    blobs = [
-        encode_jpeg([pad[ty : ty + 16, tx : tx + 16]], 16, 16, [(1, 1)], [0], q1)
-        for ty in (0, 16)
-        for tx in (0, 16)
-    ]
-    dw, dh, gray = decode_image(_tiff_jpeg(blobs, 24, 20, photometric=1,
-                                           tile=(16, 16)))
-    assert (dw, dh) == (24, 20)
-    assert np.max(np.abs(gray - img)) <= 2.0
-
-    # 8-row frame claiming a 16-row strip span
-    short = encode_jpeg([img[:8]], 24, 8, [(1, 1)], [0], q1)
-    with pytest.raises(ValueError, match="smaller than its row span"):
-        decode_tiff(_tiff_jpeg([short], 24, 16, photometric=1))

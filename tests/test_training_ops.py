@@ -431,6 +431,8 @@ def test_corrupt_media_rows_isolated_not_fatal(spark):
         (2, "image", "image/x-ppm", b"P6\nnot a number\n"),          # garbage header
         (3, "image", "image/bmp", b"BM" + b"\x00" * 20),             # truncated BMP
         (4, "image", "image/x-ppm", _ppm(4, 4, lambda x, y: (9, 9, 9))),  # healthy
+        # JPEG is an unsupported codec: the seam, not a crash
+        (5, "image", "image/jpeg", b"\xff\xd8\xff\xdb\x00\x43\x00" + bytes(64) + b"\xff\xd9"),
     ]
     media = spark.createDataFrame(rows, MEDIA_SCHEMA)
     out = {
@@ -439,6 +441,7 @@ def test_corrupt_media_rows_isolated_not_fatal(spark):
     }
     assert out[1]["err"] and out[2]["err"] and out[3]["err"]
     assert out[4]["err"] is None and out[4]["width"] == 4  # batch survived
+    assert out[5]["err"].startswith("NotImplementedError: codec not decodable")
 
 
 def test_connected_components_raises_on_nonconvergence(spark):
