@@ -897,7 +897,7 @@ def g2_neardup_index_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     w1 = ev(docs.filter(F.col("doc_id") % 3 != 2), "I", 0)
     # merge contract: ONE row per key per batch (review finding — the
     # overlapping classes only worked because MOR resolution takes max
-    # LSN; a COW merge would fan duplicate source keys out). Leg
+    # LSN). Leg
     # priority D > U > I mirrors the max-LSN winner, so the final state
     # and the declarative oracle are unchanged.
     w2 = (

@@ -32,14 +32,14 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
-def _mk_table(spark, root: str, num_buckets: int, write_mode: str = "mor"):
+def _mk_table(spark, root: str, num_buckets: int):
     from french_admin_etl_spark.streaming.apply import KEYS, REPOS_SCHEMA
     from french_admin_etl_spark.table.lake_table import LakeTable
 
     if LakeTable.exists(root):
         return LakeTable(spark, root)
     return LakeTable.create(spark, root, schema=REPOS_SCHEMA, key_cols=KEYS,
-                            num_buckets=num_buckets, write_mode=write_mode)
+                            num_buckets=num_buckets)
 
 
 def cmd_apply(args) -> None:
@@ -55,7 +55,7 @@ def cmd_apply(args) -> None:
             k: getattr(args, k)
             for k in (
                 "log_dir", "table_root", "checkpoint", "batch_lsns",
-                "num_buckets", "write_mode", "dead_letter_dir", "lineage_dir",
+                "num_buckets", "dead_letter_dir", "lineage_dir",
                 "writer_id",
             )
         }
@@ -68,7 +68,7 @@ def cmd_apply(args) -> None:
                 f"(or $SPARK_GRAFT_{req.upper()})"
             )
     spark = cfg.session(app_name="cdc_apply")
-    table = _mk_table(spark, cfg.table_root, cfg.num_buckets, cfg.write_mode)
+    table = _mk_table(spark, cfg.table_root, cfg.num_buckets)
     job = CDCApplyJob(
         spark, table, dead_letter_dir=cfg.dead_letter_dir,
         lineage_dir=cfg.lineage_dir, writer_id=cfg.writer_id,
@@ -171,7 +171,6 @@ def cmd_dag(args) -> None:
                 spark, root,
                 schema=T._parse_datatype_string(f"struct<{t['schema']}>"),
                 key_cols=t["keys"], num_buckets=args.num_buckets,
-                write_mode=args.write_mode or "mor",
             )
         jobs[name] = CDCApplyJob(
             spark, table, merge_mode=t.get("merge_mode", "overwrite")
@@ -296,8 +295,7 @@ def cmd_ingest_warc(args) -> None:
     from french_admin_etl_spark.table.lake_table import LakeTable
 
     cfg = EngineConfig.load(
-        overrides={"table_root": args.table_root, "num_buckets": args.num_buckets,
-                   "write_mode": args.write_mode}
+        overrides={"table_root": args.table_root, "num_buckets": args.num_buckets}
         | {"workers": args.cores}
     )
     if cfg.table_root is None:
@@ -317,7 +315,7 @@ def cmd_ingest_warc(args) -> None:
     else:
         table = LakeTable.create(
             spark, cfg.table_root, schema=schema, key_cols=["url"],
-            num_buckets=cfg.num_buckets, write_mode=cfg.write_mode,
+            num_buckets=cfg.num_buckets,
         )
     docs = warc_documents(
         spark, args.warc_dir, payload_limit=args.payload_limit,
@@ -537,9 +535,6 @@ def main() -> None:
     ap.add_argument("--checkpoint", default=None)
     ap.add_argument("--batch-lsns", type=int, default=None)
     ap.add_argument("--num-buckets", type=int, default=None)
-    ap.add_argument("--write-mode", choices=["cow", "mor"], default=None,
-                    help="cow: rewrite touched buckets per batch; "
-                         "mor: O(batch) delta appends + compaction (scale path)")
     ap.add_argument("--cores", type=int, default=None)
     ap.add_argument("--dead-letter-dir", default=None)
     ap.add_argument("--lineage-dir", default=None)
@@ -569,7 +564,6 @@ def main() -> None:
     gp.add_argument("--checkpoint", required=True)
     gp.add_argument("--batch-lsns", type=int, default=1_000_000)
     gp.add_argument("--num-buckets", type=int, default=32)
-    gp.add_argument("--write-mode", choices=["cow", "mor"], default=None)
     gp.add_argument("--writer-id", default="dag")
     gp.add_argument("--gate", choices=["post", "pre"], default="post",
                     help="FK gate placement: detect post-commit or prevent pre-commit (WAP)")
@@ -595,7 +589,6 @@ def main() -> None:
     wp.add_argument("warc_dir", help="directory of .warc / .warc.gz segments")
     wp.add_argument("--table-root", default=None)
     wp.add_argument("--num-buckets", type=int, default=None)
-    wp.add_argument("--write-mode", default=None, choices=[None, "cow", "mor"])
     wp.add_argument("--payload-limit", type=int, default=1 << 20)
     wp.add_argument("--text-types", default="text/html,text/plain")
     wp.add_argument("--batch-id", type=int, default=None)

@@ -38,7 +38,6 @@ class EngineConfig:
     batch_lsns: int = field(default=1_000_000, metadata={"env": "BATCH_LSNS"})
     # table layout
     num_buckets: int = field(default=32, metadata={"env": "NUM_BUCKETS"})
-    write_mode: str = field(default="mor", metadata={"env": "WRITE_MODE"})
     # job identity / paths (reference: database coordinates)
     writer_id: str | None = field(default=None, metadata={"env": "WRITER_ID"})
     log_dir: str | None = field(default=None, metadata={"env": "LOG_DIR"})
@@ -48,11 +47,6 @@ class EngineConfig:
     lineage_dir: str | None = field(default=None, metadata={"env": "LINEAGE_DIR"})
 
     def __post_init__(self):
-        if self.write_mode not in ("cow", "mor"):
-            raise ConfigError(
-                f"{_ENV_PREFIX}WRITE_MODE must be 'cow' or 'mor', got "
-                f"{self.write_mode!r}"
-            )
         for name in ("workers", "shuffle_partitions"):
             # 0 is the "unset → derive from the machine" sentinel
             if getattr(self, name) < 0:

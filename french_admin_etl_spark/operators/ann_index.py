@@ -67,12 +67,11 @@ class AnnIndex:
         spark: SparkSession,
         root: str,
         num_buckets: int = 16,
-        write_mode: str = "mor",
         **params,
     ) -> "AnnIndex":
         table = LakeTable.create(
             spark, root, schema=ann_index_schema(), key_cols=cls.KEYS,
-            num_buckets=num_buckets, write_mode=write_mode,
+            num_buckets=num_buckets,
         )
         return cls(table, **params)
 

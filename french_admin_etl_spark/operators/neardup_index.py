@@ -84,7 +84,6 @@ class NearDupIndex:
         root: str,
         id_type: str = "bigint",
         num_buckets: int = 16,
-        write_mode: str = "mor",
         **params,
     ) -> "NearDupIndex":
         table = LakeTable.create(
@@ -93,7 +92,6 @@ class NearDupIndex:
             schema=index_schema(id_type),
             key_cols=cls.KEYS,
             num_buckets=num_buckets,
-            write_mode=write_mode,
         )
         return cls(table, **params)
 

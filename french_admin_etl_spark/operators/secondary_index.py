@@ -94,7 +94,6 @@ class SecondaryIndex:
             schema=schema,
             key_cols=list(keys),
             num_buckets=num_buckets or snap["num_buckets"],
-            write_mode="mor",
         )
         idx = cls(source, table, columns)
         idx.writer_id = writer_id
@@ -188,8 +187,8 @@ class SecondaryIndex:
         → bucket-restricted source scan → left-semi join on the keys.
 
         The hit keys are materialized once (localCheckpoint) and their
-        buckets collected (≤ num_buckets ints through the driver, the
-        same bounded collect the COW merge uses), so the SOURCE side
+        buckets collected (≤ num_buckets ints through the driver, a
+        bounded collect), so the SOURCE side
         reads only the buckets that can hold a hit — at a 100-TB source
         with a selective predicate that is the difference between
         touching a handful of buckets and resolving the whole table

@@ -9,8 +9,8 @@ from two existing engine pieces:
 - the source's ``changes(from_v, to_v)`` CDF read supplies the AFTER
   image of every key that changed in the window;
 - the BEFORE image comes from time travel: the source at ``from_v``,
-  read only for the touched buckets (bucket-pruned, same trick as the
-  COW merge) and semi-joined to the changed keys.
+  read only for the touched buckets (bucket-pruned, like ``lookup``)
+  and semi-joined to the changed keys.
 
 Every changed key contributes a RETRACTION of its old contribution
 (cnt −1, sums −old) if it was live at ``from_v``, and an INSERTION
@@ -166,7 +166,6 @@ class AggregateView:
             T.StructType(cols),
             key_cols=list(group_cols),
             num_buckets=num_buckets,
-            write_mode="mor",
             properties={"resolution": "additive"},
         )
         if mins or maxs:
@@ -180,7 +179,6 @@ class AggregateView:
                 T.StructType(mm_cols),
                 key_cols=list(group_cols) + ["_vb"],
                 num_buckets=num_buckets,
-                write_mode="mor",
                 # sub-extremes are keyed by the SOURCE's key-bucket layout;
                 # a source rebucket invalidates the mapping (sync detects
                 # the mismatch and resyncs)
@@ -276,8 +274,7 @@ class AggregateView:
         gb = self.group_cols + ["_vb"]
         outs = self._mm_outs()
         vb = _bucket_expr(keys, nb)
-        # ≤ num_buckets ints through the driver — the same bounded collect
-        # the COW merge uses
+        # ≤ num_buckets ints through the driver — a bounded collect
         retr_buckets = sorted(
             r["_vb"]
             for r in old_live.select(vb.alias("_vb")).distinct().collect()
@@ -354,8 +351,8 @@ class AggregateView:
         snap = self.source.snapshot(to_v)
         keys, nb = snap["key_cols"], snap["num_buckets"]
         changed = changed.localCheckpoint(eager=True)  # one CDF scan, reused 3x
-        # touched buckets: ≤ num_buckets ints through the driver — the
-        # same bounded collect the COW merge uses
+        # touched buckets: ≤ num_buckets ints through the driver — a
+        # bounded collect
         touched = sorted(
             r[0]
             for r in changed.select(_bucket_expr(keys, nb).alias("_b")).distinct().collect()

@@ -18,16 +18,16 @@ window — tables 1..k fence to no-ops, tables k+1.. apply, and the stream
 converges with no double-apply and no gap. One checkpoint therefore
 covers the whole DAG.
 
-Per-window cost: for the common window shape (no SCHEMA events, MOR
-tables) the driver takes the FAST PATH — ONE combined scan collects every
-table's op counts and schema markers, each present table's dedup + delta
-stage write (the distributed jobs) run CONCURRENTLY in driver threads,
-and only the commits (driver-side metadata writes) run sequentially in
-FK order. Stage order is free because staged files are invisible until
+Per-window cost: for the common window shape (no SCHEMA events) the
+driver takes the FAST PATH — ONE combined scan collects every table's op
+counts and schema markers, each present table's dedup + delta stage
+write (the distributed jobs) run CONCURRENTLY in driver threads, and
+only the commits (driver-side metadata writes) run sequentially in FK
+order. Stage order is free because staged files are invisible until
 their commit; commit order is what the integrity contract needs. Windows
-that carry SCHEMA events (or COW tables) fall back to the sequential
-per-epoch ``apply_batch`` path, which splits each table's window at its
-evolution points.
+that carry SCHEMA events fall back to the sequential per-epoch
+``apply_batch`` path, which splits each table's window at its evolution
+points.
 
 FK gates (both broadcast-shaped — the parent/probe side of every join is
 the small side, so at 100 TB these are map-side filters, never shuffles):
@@ -60,7 +60,7 @@ The per-window gate runs in one of two placements (``gate=``):
   age-guarded vacuum); 'record' QUARANTINES the window — skipped
   wholesale, violation recorded, stream advances (rewind the checkpoint
   to reprocess after repairing upstream). Sequential-path windows
-  (SCHEMA events / COW tables) still gate post-commit.
+  (SCHEMA events) still gate post-commit.
 """
 
 from __future__ import annotations
@@ -164,8 +164,8 @@ class DagApplyJob:
           good rows included, violation recorded — and the stream
           advances (rewind the checkpoint to reprocess after repairing
           upstream). Windows that fall back to the sequential path
-          (SCHEMA events / COW tables) gate post-commit regardless and
-          say so in the result.
+          (SCHEMA events) gate post-commit regardless and say so in the
+          result.
 
         ``fk_indexes``: ``{(child, fk_col): (SecondaryIndex, CheckpointStore)}``
         — opt-in scale path for the gate's parent-delete leg (the lake
@@ -205,8 +205,8 @@ class DagApplyJob:
         self.max_stage_threads = max_stage_threads
         self.gate = gate
         self.quarantine_dir = quarantine_dir
-        # ops/debug escape hatch (and the A/B lever the bench uses): False
-        # forces every window down the sequential per-epoch path
+        # ops/debug escape hatch (and the A/B lever test_dag.py uses):
+        # False forces every window down the sequential per-epoch path
         self.enable_fast_path = True
         # Gate cost model: key-filtering a parent probe below its MOR
         # resolution only pays when the parent is LARGE — the filter costs
@@ -360,13 +360,10 @@ class DagApplyJob:
                 if r["op"] == "SCHEMA" and r["table"] in self.jobs:
                     markers[r["table"]].extend(r["schema_rows"])
             typed: dict[str, DataFrame] = {}
-            # fast path: SCHEMA-free window, MOR tables only — the shape of
-            # virtually every steady-state window (evolutions are rare)
-            fast = self.enable_fast_path and all(
-                not markers[name]
-                and self.jobs[name].table.snapshot().get("write_mode", "cow") == "mor"
-                for name in self.order
-                if name in present
+            # fast path: SCHEMA-free window — the shape of virtually every
+            # steady-state window (evolutions are rare)
+            fast = self.enable_fast_path and not any(
+                markers[name] for name in self.order if name in present
             )
             gate_buckets: dict[str, list[int]] = {}
             gated = False

@@ -132,7 +132,6 @@ class JoinView:
             T.StructType(lfields),
             key_cols=list(lsnap["key_cols"]),
             num_buckets=num_buckets or lsnap["num_buckets"],
-            write_mode="mor",
         )
         return cls(spark, left, right, view, on, select, writer_id, fk_index)
 
@@ -240,8 +239,8 @@ class JoinView:
         )
 
         # bucket-restricted read of the affected left rows (≤ num_buckets
-        # ints through the driver — the COW-merge bounded collect); reads
-        # the checkpointed partitions, no lineage recompute
+        # ints through the driver — a bounded collect); reads the
+        # checkpointed partitions, no lineage recompute
         nb = self.left.snapshot(to_l)["num_buckets"]
         summary = (
             changed.groupBy(

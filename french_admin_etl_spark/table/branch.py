@@ -79,8 +79,6 @@ class Branch:
         if self.exists():
             return self._load()
         snap = self.table.snapshot()
-        if snap.get("write_mode", "cow") != "mor":
-            raise ValueError("branches stage MOR delta appends; table is COW")
         if snap["properties"].get("resolution") == "additive":
             raise ValueError("additive tables have no branch path (use merge_add)")
         return {

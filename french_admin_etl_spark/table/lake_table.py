@@ -12,18 +12,16 @@ table format with exactly those properties:
 
 Design for 100 TB:
 
-- **Hash-bucketed, two write modes.** Every row belongs to bucket
-  ``pmod(xxhash64(key...), num_buckets)``. In **copy-on-write** ('cow'), a
-  MERGE only reads and rewrites the buckets its source batch touches
-  (bucket pruning mirrors Iceberg partition/file pruning); untouched file
-  groups are carried by reference into the new snapshot. In
-  **merge-on-read** ('mor', the CDC scale path), a MERGE appends the
-  deduped batch as delta file groups — O(batch) write, no target read, no
-  join — and reads resolve max-LSN per key across base+delta;
-  ``compact()`` (auto past ``compact.max-delta-files``) folds deltas back.
-  At 10^10 events, COW's per-micro-batch rewrite is O(table × batches) —
-  MOR is how Hudi/Paimon/Iceberg-MOR make the same trade. At cluster
-  scale num_buckets is sized so one bucket ≈ one task's worth of data.
+- **Hash-bucketed, merge-on-read.** Every row belongs to bucket
+  ``pmod(xxhash64(key...), num_buckets)``. A MERGE appends the deduped
+  batch as delta file groups — O(batch) write, no target read, no join —
+  and reads resolve max-LSN per key across base+delta, touching only the
+  buckets a query needs (bucket pruning mirrors Iceberg partition/file
+  pruning); ``compact()`` (auto past ``compact.max-delta-files``) folds
+  deltas back. This is the trade Hudi/Paimon/Iceberg-MOR make: at 10^10
+  events, rewriting every touched bucket per micro-batch would be
+  O(table × batches). At cluster scale num_buckets is sized so one
+  bucket ≈ one task's worth of data.
 - **Atomic commit / optimistic concurrency.** A snapshot JSON names the
   complete set of live files. Writers stage data files first, then attempt
   an exclusive create of the next version file; a loser raises
@@ -39,11 +37,11 @@ Design for 100 TB:
   ``ON CONFLICT DO UPDATE`` redelivery tolerance
   (``region_repository.go:38-42``).
 - **LSN-guarded upsert + tombstones.** Each physical row carries
-  ``_lsn`` (last applied sequence) and ``_deleted``. MERGE applies a source
-  row only when ``s.lsn >= t._lsn`` (equal LSN: later commit wins — same
-  tie-break both write modes), so stale out-of-order events arriving
-  in *later* batches are ignored; deletes leave tombstones so a stale
-  pre-delete update cannot resurrect a key. ``vacuum_tombstones`` reclaims
+  ``_lsn`` (last applied sequence) and ``_deleted``. Reads resolve each
+  key to its row with the greatest ``(_lsn, commit seq)`` (equal LSN:
+  later commit wins), so stale out-of-order events arriving in *later*
+  batches are ignored; deletes leave tombstones so a stale pre-delete
+  update cannot resurrect a key. ``vacuum_tombstones`` reclaims
   tombstones once the source watermark has passed them.
 - **Schema evolution.** Snapshots record a logical schema version plus the
   op log (add_column / widen / rename_column). Data files are never
@@ -98,6 +96,11 @@ class SchemaOp:
 
 @dataclass
 class MergeStats:
+    """Outcome of one MERGE. ``rows_upserted``/``rows_deleted`` count the
+    batch's source ops (its upserts and deletes), not their net effect
+    on the table: a merge-on-read append never reads the target, so
+    whether a delete hit a live row is only known at read time."""
+
     batch_id: int | None
     snapshot_version: int
     rows_upserted: int
@@ -158,6 +161,23 @@ def _bloom_config(properties: dict) -> tuple[int, int]:
     return bbits, bk
 
 
+def _compact_threshold(properties: dict) -> int:
+    """Parsed, validated ``compact.max-delta-files`` (default 8): the
+    delta-group count per bucket that triggers auto-compaction. One
+    parser serves create-time rejection and the pre-commit check, so a
+    bad value never surfaces after a batch's commit has landed."""
+    raw = properties.get("compact.max-delta-files", 8)
+    n = None
+    if isinstance(raw, (int, str)) and not isinstance(raw, bool):
+        try:
+            n = int(raw)
+        except ValueError:
+            pass
+    if n is None or n < 1:
+        raise ValueError(f"compact.max-delta-files must be an integer >= 1 (got {raw!r})")
+    return n
+
+
 def _bloom_positions_expr(keys: list[str], bits: int, hashes: int):
     """Array of ``hashes`` bit positions for a row's key tuple — the
     bloom-filter address set. Each hash is the table's own xxhash64 over
@@ -201,24 +221,24 @@ class LakeTable:
         key_cols: list[str],
         num_buckets: int = 16,
         properties: dict | None = None,
-        write_mode: str = "cow",
+        write_mode: str = "mor",
     ) -> "LakeTable":
         """CREATE TABLE: logical schema only (internal cols added physically).
 
-        write_mode:
-        - 'cow' (copy-on-write): MERGE joins source against the touched
-          buckets and rewrites them — reads stay single-pass, writes cost
-          O(touched table data) per batch.
-        - 'mor' (merge-on-read): MERGE appends the deduped source as DELTA
-          file groups — writes cost O(batch); reads resolve max-LSN per key
-          across base+delta, and ``compact()`` (auto-triggered past
-          ``compact.max-delta-files``) folds deltas back into the base.
-          This is the CDC-ingest scale path: at 10^10 events, rewriting
-          every touched bucket per micro-batch is O(table x batches).
-        """
-        if write_mode not in ("cow", "mor"):
-            raise ValueError(f"unknown write_mode {write_mode}")
+        ``write_mode`` accepts only 'mor' (merge-on-read, the one write
+        path); new snapshots keep recording it so every table's snapshot
+        JSON has the same shape."""
+        if write_mode != "mor":
+            raise ValueError(f"write_mode must be 'mor' (got {write_mode!r})")
+        if isinstance(num_buckets, bool) or not isinstance(num_buckets, int) or num_buckets < 1:
+            raise ValueError(f"num_buckets must be an int >= 1 (got {num_buckets!r})")
+        if not key_cols or len(set(key_cols)) != len(key_cols):
+            raise ValueError(f"key_cols must be non-empty with no duplicates (got {key_cols!r})")
+        missing = [k for k in key_cols if k not in schema.fieldNames()]
+        if missing:
+            raise ValueError(f"key_cols {missing} are not top-level fields of the schema")
         _bloom_config(properties or {})  # reject a bad bloom config up front
+        _compact_threshold(properties or {})
         t = cls(spark, root)
         os.makedirs(t._meta_dir, exist_ok=True)
         os.makedirs(t._data_dir, exist_ok=True)
@@ -861,17 +881,19 @@ class LakeTable:
         ``_commit_version``. Deduped per key to the latest change in the
         window (same max-(_lsn, seq) rule as read resolution).
 
-        Raises on COW tables (their merges REWRITE buckets — the commit
-        does not record which rows changed; use MOR for tables that feed
-        downstream consumers) and when the window's deltas have already
+        Raises on a legacy table whose snapshot an earlier build wrote
+        with ``"write_mode": "cow"`` (its copy-on-write file groups carry
+        no commit ``seq``, so a window over them would silently skip
+        rows; merging into such a table still works, its groups read as
+        plain base groups) and when the window's deltas have already
         been folded away by compaction (the compacted base, seq = compact
         commit, no longer separates the window's changes)."""
         snap = self.snapshot(to_version)
         to_v = to_version if to_version is not None else snap["version"]
         if snap.get("write_mode", "cow") != "mor":
             raise ValueError(
-                "changes() requires write_mode='mor' (COW merges rewrite "
-                "buckets without recording per-row changes)"
+                "changes() cannot read a legacy copy-on-write table: its "
+                "file groups record no commit seq"
             )
         if snap["properties"].get("resolution") == "additive":
             raise ValueError(
@@ -1155,19 +1177,32 @@ class LakeTable:
           WHEN NOT MATCHED AND s.op = 'D'                   THEN tombstone
           otherwise (stale seq, s.seq < t._lsn)             THEN no-op
 
-        Equal-LSN tie-break: the LATER COMMIT WINS (>=, not >) — parity
-        with MOR read resolution, where ``max_by(payload, (_lsn, commit
-        seq))`` lets a later commit's row beat an equal-LSN base row. A
-        bootstrap row (``_lsn=0``) plus a delta at lsn=0 therefore yields
-        the delta on BOTH write modes; write_mode never changes final
-        state. Redelivery of the same event is still idempotent (same row
-        content → same result), and true replays are fenced by batch_id
-        before the guard is ever consulted.
+        Equal-LSN tie-break: the LATER COMMIT WINS (>=, not >) — read
+        resolution's ``max_by(payload, (_lsn, commit seq))`` lets a later
+        commit's row beat an equal-LSN base row, so a bootstrap row
+        (``_lsn=0``) plus a delta at lsn=0 yields the delta. Redelivery of
+        the same event is still idempotent (same row content → same
+        result), and true replays are fenced by batch_id before the
+        guard is ever consulted.
+
+        Merge-on-read: the (pre-deduped) source is appended as delta file
+        groups — NO read of the target, NO join; write cost is O(batch)
+        regardless of table size. Deletes become tombstone rows, and the
+        read path resolves the rules above per key. The returned counts
+        are therefore source ops applied (see :class:`MergeStats`).
 
         mode='overwrite' → UPDATE SET * (reference S6, full-row upsert,
         ``region_repository.go:35-42``); mode='coalesce' → per-column
         ``SET c = coalesce(s.c, t.c)`` (reference S7 partial merge,
-        ``commune_population_repository.go:201-264``).
+        ``commune_population_repository.go:201-264``): the delta file
+        groups are FLAGGED, and the read path switches to per-column
+        last-non-null resolution — for each column the winning value
+        comes from the greatest ``(_lsn, commit seq)`` row that actually
+        SET it (nulls in a coalesce delta mean "not updated", never
+        "clear"), with non-coalesce rows and tombstones acting as
+        barriers. Intra-batch partial updates must be pre-folded with
+        ``operators.dedup.dedup_coalesce`` (one row per key, each column
+        already last-non-null within the batch).
 
         ``writer_id`` namespaces the exactly-once fence: each writer (e.g.
         one per log partition in a multi-writer topology) gets its own
@@ -1180,7 +1215,6 @@ class LakeTable:
             raise ValueError(
                 "additive tables take increments, not row states — use merge_add()"
             )
-        keys, nb, sv = snap["key_cols"], snap["num_buckets"], snap["schema_version"]
         fence_key = "last_batch_id" if writer_id is None else f"last_batch_id.{writer_id}"
 
         if batch_id is not None:
@@ -1188,112 +1222,11 @@ class LakeTable:
             if fence is not None and batch_id <= fence:
                 return MergeStats(batch_id, snap["version"], 0, 0, 0, fenced=True)
 
-        logical = [f["name"] for f in snap["schemas"][str(sv)]["fields"]]
-        data_cols = [c for c in logical if c not in keys]
-
         source = self._align_source_types(source, snap)
-
-        if snap.get("write_mode", "cow") == "mor":
-            return self._merge_mor(
-                source, snap, seq_col, op_col, batch_id, extra_properties, fence_key,
-                coalesce=(mode == "coalesce"),
-            )
-
-        src = source.withColumn("_bucket", _bucket_expr(keys, nb))
-        touched = sorted(r[0] for r in src.select("_bucket").distinct().collect())
-        if not touched:
-            # empty source slice: nothing to join, rewrite, or fence (same
-            # rationale as the MOR empty-slice skip — replaying an empty
-            # slice is idempotent without a metadata-only commit)
+        staged = self._mor_stage(source, snap, seq_col, op_col, coalesce=(mode == "coalesce"))
+        if staged is None:
             return MergeStats(batch_id, snap["version"], 0, 0, 0)
-        tgt = self.read_raw(buckets=touched)
-
-        s = src.alias("s")
-        t = tgt.alias("t")
-        joined = t.join(s, on=keys, how="full_outer")
-
-        s_seq = F.col(f"s.{seq_col}")
-        s_op = F.col(f"s.{op_col}")
-        t_lsn = F.col("t._lsn")
-        s_present = s_seq.isNotNull()
-        t_present = t_lsn.isNotNull()
-        # >= : equal-LSN source rows (a later commit by definition — the
-        # target row was committed earlier) win, matching MOR's
-        # (_lsn, commit seq) tie-break so write_mode never changes state
-        take_s = s_present & (~t_present | (s_seq >= t_lsn))
-        is_del = s_op == F.lit("D")
-        # intra-batch delete barrier (dedup_coalesce's _del_lsn): when the
-        # source row survived a delete INSIDE its batch and that delete
-        # supersedes the target row, null source columns mean CLEARED by
-        # the delete — they must NOT coalesce back to pre-delete target
-        # values (the resurrection bug caught by review repro)
-        if "_del_lsn" in source.columns:
-            s_dbar = F.col("s._del_lsn")
-            cleared = take_s & s_dbar.isNotNull() & (
-                ~t_present | (s_dbar >= t_lsn)
-            )
-        else:
-            cleared = F.lit(False)
-
-        out_cols = [F.col(k).alias(k) for k in keys]
-        for c in data_cols:
-            sc, tc = F.col(f"s.{c}"), F.col(f"t.{c}")
-            if mode == "coalesce":
-                new_val = F.when(cleared, sc).otherwise(F.coalesce(sc, tc))
-            else:
-                new_val = sc
-            out_cols.append(
-                F.when(take_s & is_del, F.lit(None).cast(tgt.schema[c].dataType))
-                .when(take_s, new_val)
-                .otherwise(tc)
-                .alias(c)
-            )
-        out_cols.append(F.when(take_s, s_seq).otherwise(t_lsn).cast("long").alias("_lsn"))
-        out_cols.append(
-            F.when(take_s, is_del).otherwise(F.coalesce(F.col("t._deleted"), F.lit(False))).alias(
-                "_deleted"
-            )
-        )
-        was_live = t_present & ~F.coalesce(F.col("t._deleted"), F.lit(False))
-        out_cols.append(
-            F.when(take_s & ~is_del, F.lit("upsert"))
-            .when(take_s & is_del & was_live, F.lit("delete"))
-            .otherwise(F.lit("noop"))
-            .alias("_action")
-        )
-
-        obs = Observation()
-        merged = joined.select(*out_cols).observe(
-            obs,
-            F.sum(F.when(F.col("_action") == "upsert", 1).otherwise(0)).alias("upserts"),
-            F.sum(F.when(F.col("_action") == "delete", 1).otherwise(0)).alias("deletes"),
-        )
-        merged = merged.drop("_action").withColumn("_bucket", _bucket_expr(keys, nb))
-        groups = self._stage_write(merged, sv)
-        got = obs.get
-
-        new_groups = [g for g in snap["file_groups"] if g["bucket"] not in set(touched)] + groups
-        new_groups.sort(key=lambda g: g["bucket"])
-        props = dict(snap["properties"])
-        if batch_id is not None:
-            props[fence_key] = batch_id
-        for k, v in (extra_properties or {}).items():
-            props[k] = v
-        new = dict(snap)
-        new.update(
-            version=snap["version"] + 1,
-            file_groups=new_groups,
-            properties=props,
-            parent=snap["version"],
-        )
-        self._commit(new)
-        return MergeStats(
-            batch_id,
-            new["version"],
-            int(got["upserts"] or 0),
-            int(got["deletes"] or 0),
-            len(touched),
-        )
+        return self._mor_commit(staged, batch_id, extra_properties, fence_key)
 
     def _restage_on_layout_change(
         self, snap: dict, nb: int, delta: DataFrame, keys: list[str], sv: int,
@@ -1390,38 +1323,6 @@ class LakeTable:
             delta = delta.unionByName(barriers)
         return delta.withColumn("_bucket", _bucket_expr(keys, nb)), obs
 
-    def _merge_mor(
-        self,
-        source: DataFrame,
-        snap: dict,
-        seq_col: str,
-        op_col: str,
-        batch_id: int | None,
-        extra_properties: dict | None,
-        fence_key: str = "last_batch_id",
-        coalesce: bool = False,
-    ) -> MergeStats:
-        """Merge-on-read apply: append the (pre-deduped) source as delta
-        file groups — NO read of the target, NO join; write cost is
-        O(batch) regardless of table size. Deletes become tombstone rows;
-        the read path resolves max-LSN per key. Counts report source ops
-        applied (upserts/deletes in the batch), since the net effect
-        against current state is unknowable without reading it.
-
-        ``coalesce=True`` (S7 partial-column merge on the MOR scale path):
-        the delta file groups are FLAGGED, and the read path switches to
-        per-column last-non-null resolution — for each column the winning
-        value comes from the greatest ``(_lsn, commit seq)`` row that
-        actually SET it (nulls in a coalesce delta mean "not updated",
-        never "clear"), with non-coalesce rows and tombstones acting as
-        barriers. Intra-batch partial updates must be pre-folded with
-        ``operators.dedup.dedup_coalesce`` (one row per key, each column
-        already last-non-null within the batch)."""
-        staged = self._mor_stage(source, snap, seq_col, op_col, coalesce)
-        if staged is None:
-            return MergeStats(batch_id, snap["version"], 0, 0, 0)
-        return self._mor_commit(staged, batch_id, extra_properties, fence_key)
-
     def _mor_stage(
         self, source: DataFrame, snap: dict, seq_col: str, op_col: str, coalesce: bool
     ) -> dict | None:
@@ -1509,6 +1410,9 @@ class LakeTable:
                 props[fence_key] = batch_id
             for k, v in (extra_properties or {}).items():
                 props[k] = v
+            # parsed from the props this attempt publishes, BEFORE the
+            # commit: a bad value must fail the batch, not a landed commit
+            threshold = _compact_threshold(props)
             new = dict(snap)
             new.update(
                 version=snap["version"] + 1,
@@ -1532,7 +1436,6 @@ class LakeTable:
         # auto-compaction: fold deltas into the base for any bucket past the
         # threshold (a maintenance commit, separate from the fenced commit —
         # a crash in between leaves deltas in place, correctness unaffected)
-        threshold = int(props.get("compact.max-delta-files", 8))
         from collections import Counter
 
         counts = Counter(g["bucket"] for g in new_groups if g.get("delta"))
@@ -1580,8 +1483,6 @@ class LakeTable:
                 'merge_add() needs an additive table (create with properties '
                 '{"resolution": "additive"}); row-state tables use merge()'
             )
-        if snap.get("write_mode", "cow") != "mor":
-            raise ValueError("additive tables must be write_mode='mor'")
         keys, nb, sv = snap["key_cols"], snap["num_buckets"], snap["schema_version"]
         fence_key = "last_batch_id" if writer_id is None else f"last_batch_id.{writer_id}"
         phys = self._schema_at(snap, sv)
@@ -1651,13 +1552,13 @@ class LakeTable:
         Two phases, both distributed: (1) one predicate-pushed scan of the
         resolved table yields the matching KEYS (they never hit the
         driver); (2) a standard MERGE of op='D' events at ``lsn`` writes
-        the tombstones — an O(matched) delta append on MOR, a rewrite of
-        only the touched buckets on COW. The deletes then behave like any
-        CDC delete: late out-of-order events below ``lsn`` stay shadowed
-        by the tombstone (T6), redelivery with the same ``batch_id``
-        fences to a no-op (T5), ``changes()`` surfaces them to downstream
-        consumers (cascades, aggregate views), and ``vacuum_tombstones``
-        reclaims them once the log watermark passes ``lsn``.
+        the tombstones as an O(matched) delta append. The deletes then
+        behave like any CDC delete: late out-of-order events below
+        ``lsn`` stay shadowed by the tombstone (T6), redelivery with the
+        same ``batch_id`` fences to a no-op (T5), ``changes()`` surfaces
+        them to downstream consumers (cascades, aggregate views), and
+        ``vacuum_tombstones`` reclaims them once the log watermark passes
+        ``lsn``.
 
         ``lsn=None`` stamps the deletes at the table's current high-water
         mark + 1 ("delete as of now"): one single-row aggregation job.
@@ -1933,12 +1834,11 @@ class LakeTable:
         - **Tombstones survive** (they ride ``read_raw``'s resolution like
           compaction) so late out-of-order events stay shadowed — in their
           NEW bucket, which is where a post-rebucket merge routes them.
-        - **Concurrent MOR writers** are safe: a writer that staged its
+        - **Concurrent writers** are safe: a writer that staged its
           delta under the old count detects the layout change on rebase
-          and restages (see ``_merge_mor``); the orphaned first-stage
-          files are reclaimed by ``vacuum_orphans``. A concurrent COW
-          writer fails its commit with ``CommitConflict`` as any COW race
-          does. ``rebucket`` itself never retries — racing it against
+          and restages (see ``_mor_commit``); the orphaned first-stage
+          files are reclaimed by ``vacuum_orphans``. ``rebucket`` itself
+          never retries — racing it against
           another full-rewrite maintenance pass is a scheduler bug and
           surfaces as ``CommitConflict``.
         - **changes() windows are folded** by the rewrite (groups are
@@ -2233,7 +2133,7 @@ class LakeTable:
     # ------------------------------------------------------------- evolution
 
     def evolve(self, ops: list[SchemaOp]) -> int:
-        """Apply schema-evolution ops; metadata-only commit (COW on read)."""
+        """Apply schema-evolution ops; metadata-only commit (files upgrade on read)."""
         snap = self.snapshot()
         sv = snap["schema_version"]
         schema = T.StructType.fromJson(snap["schemas"][str(sv)])

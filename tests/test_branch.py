@@ -13,10 +13,10 @@ ST = T.StructType(
 )
 
 
-def _mk(spark, root, mode="mor", props=None):
+def _mk(spark, root, props=None):
     return LakeTable.create(
         spark, root, schema=ST, key_cols=["k"], num_buckets=2,
-        write_mode=mode, properties=props,
+        write_mode="mor", properties=props,
     )
 
 
@@ -143,10 +143,6 @@ def test_rebucket_under_open_branch_refused(spark, table):
 
 
 def test_branch_validation(spark, tmp_root):
-    cow = _mk(spark, os.path.join(tmp_root, "cow"), mode="cow")
-    cow.merge(_src(spark, [("a", 1, 1, "I")]), batch_id=0)
-    with pytest.raises(ValueError, match="COW"):
-        cow.branch("x").merge(_src(spark, [("b", 2, 2, "I")]))
     t = _mk(spark, os.path.join(tmp_root, "t2"))
     with pytest.raises(ValueError, match="bad branch name"):
         t.branch("../evil")

@@ -13,7 +13,6 @@ def test_defaults_when_nothing_set():
     assert cfg.workers == 0
     assert cfg.batch_lsns == 1_000_000
     assert cfg.num_buckets == 32
-    assert cfg.write_mode == "mor"
     assert cfg.writer_id is None and cfg.table_root is None
 
 
@@ -21,14 +20,12 @@ def test_env_vars_bind_typed():
     env = {
         "SPARK_GRAFT_CPUS": "16",
         "SPARK_GRAFT_BATCH_LSNS": "5000",
-        "SPARK_GRAFT_WRITE_MODE": "cow",
         "SPARK_GRAFT_WRITER_ID": "w7",
         "SPARK_GRAFT_TABLE_ROOT": "/data/t",
     }
     cfg = EngineConfig.load(environ=env, dotenv_path="/nonexistent")
     assert cfg.workers == 16 and isinstance(cfg.workers, int)
     assert cfg.batch_lsns == 5000
-    assert cfg.write_mode == "cow"
     assert cfg.writer_id == "w7" and cfg.table_root == "/data/t"
 
 
@@ -64,13 +61,6 @@ def test_overrides_beat_everything_and_none_is_transparent(tmp_path):
 def test_bad_int_names_the_variable():
     with pytest.raises(ConfigError, match="SPARK_GRAFT_CPUS"):
         EngineConfig.load(environ={"SPARK_GRAFT_CPUS": "many"}, dotenv_path="/x")
-
-
-def test_bad_write_mode_rejected():
-    with pytest.raises(ConfigError, match="WRITE_MODE"):
-        EngineConfig.load(
-            environ={"SPARK_GRAFT_WRITE_MODE": "overwrite"}, dotenv_path="/x"
-        )
 
 
 def test_negative_rejected():

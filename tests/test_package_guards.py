@@ -86,3 +86,33 @@ def test_every_engine_config_field_is_read():
                     read |= loads(fn, "self")
     unread = [f.name for f in dataclasses.fields(EngineConfig) if f.name not in read]
     assert unread == [], unread
+
+
+def test_perfbench_traced_methods_exist():
+    """The benchmark's traced run wraps each ``(module, class, method)``
+    in ``perfbench/tracing.py``'s ``TRACED`` list, looked up in the
+    class's own ``__dict__``. Folding or renaming one of those methods
+    would break every traced run, so each must stay defined directly in
+    its class body."""
+    tracing = ast.parse((PKG.parent / "perfbench" / "tracing.py").read_text())
+    traced = next(
+        ast.literal_eval(node.value)
+        for node in tracing.body
+        if isinstance(node, ast.Assign)
+        and any(isinstance(t, ast.Name) and t.id == "TRACED" for t in node.targets)
+    )
+    assert traced
+    missing = []
+    for mod, cls_name, meth, _span in traced:
+        rel = pathlib.Path(*mod.split("."))
+        tree = ast.parse((PKG.parent / rel.with_suffix(".py")).read_text())
+        methods = {
+            fn.name
+            for cls in tree.body
+            if isinstance(cls, ast.ClassDef) and cls.name == cls_name
+            for fn in cls.body
+            if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef))
+        }
+        if meth not in methods:
+            missing.append(f"{mod}.{cls_name}.{meth}")
+    assert missing == [], missing

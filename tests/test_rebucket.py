@@ -23,10 +23,10 @@ ST = T.StructType(
 )
 
 
-def _mk(spark, root, mode="mor", nb=4, props=None):
+def _mk(spark, root, nb=4, props=None):
     return LakeTable.create(
         spark, root, schema=ST, key_cols=["k"], num_buckets=nb,
-        write_mode=mode, properties=props,
+        write_mode="mor", properties=props,
     )
 
 
@@ -38,9 +38,8 @@ def _state(t, version=None):
     return {r["k"]: r["v"] for r in t.read(version=version).collect()}
 
 
-@pytest.mark.parametrize("mode", ["cow", "mor"])
-def test_rebucket_preserves_state_and_reroutes_merges(spark, tmp_root, mode):
-    t = _mk(spark, os.path.join(tmp_root, f"rb_{mode}"), mode=mode, nb=2)
+def test_rebucket_preserves_state_and_reroutes_merges(spark, tmp_root):
+    t = _mk(spark, os.path.join(tmp_root, "rb_mor"), nb=2)
     t.merge(_src(spark, [(f"k{i}", i, i + 1, "I") for i in range(40)]), batch_id=0)
     t.merge(_src(spark, [("k3", None, 100, "D"), ("k5", 500, 101, "U")]), batch_id=1)
     before = _state(t)

@@ -24,7 +24,7 @@ timed window, and runs best-of-N trials to de-noise the shared host.
 Caveat recorded in BASELINE.md: all workers share one machine's memory
 bandwidth and disk, so this UNDERSTATES what distinct cluster nodes give.
 
-Usage: python tools/scaling_bench.py [n_events_total] [N_cores] [write_mode] [content_len]
+Usage: python tools/scaling_bench.py [n_events_total] [N_cores] [content_len] [rounds]
 Writes BENCH_scaling.json at the repo root and prints the JSON.
 """
 
@@ -51,7 +51,7 @@ from french_admin_etl_spark.streaming.checkpoint import CheckpointStore
 from french_admin_etl_spark.table.lake_table import LakeTable
 
 cores = int(sys.argv[1]); log_dir = sys.argv[2]; work = sys.argv[3]
-batches = int(sys.argv[4]); wmode = sys.argv[5]
+batches = int(sys.argv[4])
 # cap the JVM's visible CPU count: a real executor JVM sees only its own
 # node's cores; without this every worker sizes GC/JIT/netty pools for the
 # whole machine and 4 workers oversubscribe it 4x
@@ -84,7 +84,7 @@ for _root, _, _files in os.walk(log_dir):
 
 def mk(name):
     t = LakeTable.create(spark, os.path.join(work, name), schema=REPOS_SCHEMA,
-                         key_cols=KEYS, num_buckets=max(8, cores), write_mode=wmode)
+                         key_cols=KEYS, num_buckets=max(8, cores))
     return CDCApplyJob(spark, t), t
 
 # warmup: JIT/codegen/shuffle machinery on a throwaway table
@@ -122,7 +122,7 @@ def gen_partitions(base: str, n_events_total: int, content_len: int = 512) -> li
     return dirs
 
 
-def _launch(cores: int, log_dir: str, work: str, batches: int, wmode: str):
+def _launch(cores: int, log_dir: str, work: str, batches: int):
     script = WORKER.format(repo=REPO)
     # Spark scratch on tmpfs: each real executor has its own local disk;
     # on this single-VM sandbox all workers would otherwise serialize on one
@@ -135,15 +135,14 @@ def _launch(cores: int, log_dir: str, work: str, batches: int, wmode: str):
     os.makedirs(work, exist_ok=True)
     errf = open(os.path.join(work, "worker.stderr"), "w")
     return subprocess.Popen(
-        [sys.executable, "-c", script, str(cores), log_dir, work, str(batches), wmode],
+        [sys.executable, "-c", script, str(cores), log_dir, work, str(batches)],
         stdout=subprocess.PIPE, stderr=errf, text=True, env=env,
     )
 
 
-def run_config(part_dirs: list[str], cores: int, work: str, batches: int,
-               wmode: str) -> dict:
+def run_config(part_dirs: list[str], cores: int, work: str, batches: int) -> dict:
     procs = [
-        _launch(cores, d, os.path.join(work, f"w{i}"), batches, wmode)
+        _launch(cores, d, os.path.join(work, f"w{i}"), batches)
         for i, d in enumerate(part_dirs)
     ]
     outs = []
@@ -168,11 +167,11 @@ def run_config(part_dirs: list[str], cores: int, work: str, batches: int,
     }
 
 
-def best_of(trials: int, part_dirs, cores, workbase, batches, wmode) -> dict:
+def best_of(trials: int, part_dirs, cores, workbase, batches) -> dict:
     best = None
     for t in range(trials):
         tdir = f"{workbase}_t{t}"
-        r = run_config(part_dirs, cores, tdir, batches, wmode)
+        r = run_config(part_dirs, cores, tdir, batches)
         shutil.rmtree(tdir, ignore_errors=True)
         if best is None or r["events_per_sec"] > best["events_per_sec"]:
             best = r
@@ -180,7 +179,7 @@ def best_of(trials: int, part_dirs, cores, workbase, batches, wmode) -> dict:
     return best
 
 
-def interleaved_rounds(rounds: int, part_dirs, cores, work, batches, wmode):
+def interleaved_rounds(rounds: int, part_dirs, cores, work, batches):
     """Noise-robust protocol for a shared host: each round runs the N
     config and the 4N config BACK-TO-BACK (same host-load window), so the
     per-round efficiency ratio compares like with like even when the
@@ -190,8 +189,8 @@ def interleaved_rounds(rounds: int, part_dirs, cores, work, batches, wmode):
     out = []
     for t in range(rounds):
         probe0 = round(_mem_copy_worker(t) / 4.0 / 1024, 2)
-        lo = run_config(part_dirs[:1], cores, os.path.join(work, f"lo_r{t}"), batches, wmode)
-        hi = run_config(part_dirs, cores, os.path.join(work, f"hi_r{t}"), batches, wmode)
+        lo = run_config(part_dirs[:1], cores, os.path.join(work, f"lo_r{t}"), batches)
+        hi = run_config(part_dirs, cores, os.path.join(work, f"hi_r{t}"), batches)
         probe1 = round(_mem_copy_worker(100 + t) / 4.0 / 1024, 2)
         shutil.rmtree(os.path.join(work, f"lo_r{t}"), ignore_errors=True)
         shutil.rmtree(os.path.join(work, f"hi_r{t}"), ignore_errors=True)
@@ -260,9 +259,8 @@ def hardware_context(n: int) -> dict:
 def main() -> None:
     n_events = int(sys.argv[1]) if len(sys.argv) > 1 else 16_000_000
     n = int(sys.argv[2]) if len(sys.argv) > 2 else 8
-    wmode = sys.argv[3] if len(sys.argv) > 3 else "mor"
-    content_len = int(sys.argv[4]) if len(sys.argv) > 4 else 512
-    rounds = int(sys.argv[5]) if len(sys.argv) > 5 else 3
+    content_len = int(sys.argv[3]) if len(sys.argv) > 3 else 512
+    rounds = int(sys.argv[4]) if len(sys.argv) > 4 else 3
     batches = 4
     # work on tmpfs when available: emulates per-executor local disks
     base = "/dev/shm" if os.path.isdir("/dev/shm") else None
@@ -271,7 +269,7 @@ def main() -> None:
     parts = gen_partitions(work, n_events, content_len)
     gen_s = round(time.monotonic() - t, 1)
 
-    rnds = interleaved_rounds(rounds, parts, n, work, batches, wmode)
+    rnds = interleaved_rounds(rounds, parts, n, work, batches)
     valid = [r for r in rnds if r["valid"]] or rnds
     # headline: the best PHYSICAL round — weak-scaling efficiency above
     # 1.0 is measurement artifact (the N half ran in a slightly slower
@@ -287,7 +285,6 @@ def main() -> None:
 
     result = {
         "n_events_total": n_events,
-        "write_mode": wmode,
         "content_len": content_len,
         "gen_sec": gen_s,
         "topology": (
