@@ -12,8 +12,7 @@ exactly-once MERGE upserts into snapshot-isolated lake tables:
                  long->wide pivot, hot-key salting; training-data ops
                  (``textdedup``: exact/minhash/simhash dedup,
                  ``similarity``: similarity search) and media blobs
-                 (``multimodal``: metadata without decode, library-free
-                 image decode + thumbnail features)
+                 (``multimodal``: media blob metadata without decode)
 - ``functions``  vectorized hashing (sha256 pandas UDF), normalization
                  casts, text quality and language-id
 - ``sources``    CSV / nested-JSON / change-event-log readers

@@ -21,15 +21,12 @@ from french_admin_etl_spark.operators.similarity import (
     sign_bucket,
     signature_bucket_ann,
 )
-from french_admin_etl_spark.operators.multimodal import (
-    extract_image_features,
-    media_metadata,
-)
+from french_admin_etl_spark.operators.multimodal import media_metadata
 
 __all__ = [
     "exact_dedup", "jaccard_pairs", "lsh_candidate_pairs", "minhash_signature",
     "simhash32", "simhash_near_dup_pairs", "cosine_topk", "near_dup_pairs_cosine", "sign_bucket",
-    "signature_bucket_ann", "ivf_ann", "ivf_assign", "ivf_train", "extract_image_features", "media_metadata",
+    "signature_bucket_ann", "ivf_ann", "ivf_assign", "ivf_train", "media_metadata",
     "dedup_max_seq",
     "dedup_max_seq_window",
     "allow_list_filter",

@@ -317,9 +317,11 @@ class CDCApplyJob:
                 "batch windows"
             )
         normalized = self._normalize(df)
-        # persist the deduped MERGE source: it is consumed by two actions
-        # (touched-bucket discovery, the merge join) and re-running the
-        # dedup shuffle + sha for each would double the work.
+        # persist the deduped MERGE source: the stage write reads it twice
+        # in coalesce mode (the delta rows and _build_mor_delta's barrier
+        # union), and _restage_on_layout_change reads it again when a
+        # rebucket races the commit; re-running the dedup shuffle + sha
+        # for each read would multiply the work.
         # coalesce mode folds intra-batch PARTIAL updates per column
         # (dedup_max_seq would keep only the max-LSN row, dropping columns
         # set by earlier events in the same batch)

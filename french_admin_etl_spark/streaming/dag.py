@@ -87,6 +87,9 @@ from french_admin_etl_spark.streaming.apply import (
 from french_admin_etl_spark.streaming.checkpoint import CheckpointStore
 from french_admin_etl_spark.table.lake_table import MergeStats
 
+# concurrent stage writes per fast-path window
+_MAX_STAGE_THREADS = 8
+
 
 @dataclass
 class FKEdge:
@@ -138,7 +141,6 @@ class DagApplyJob:
         writer_id: str = "dag",
         fk_check: bool = True,
         on_violation: str = "halt",
-        max_stage_threads: int = 8,
         gate: str = "post",
         fk_indexes: dict | None = None,
         quarantine_dir: str | None = None,
@@ -164,8 +166,7 @@ class DagApplyJob:
           good rows included, violation recorded — and the stream
           advances (rewind the checkpoint to reprocess after repairing
           upstream). Windows that fall back to the sequential path
-          (SCHEMA events) gate post-commit regardless and say so in the
-          result.
+          (SCHEMA events) gate post-commit.
 
         ``fk_indexes``: ``{(child, fk_col): (SecondaryIndex, CheckpointStore)}``
         — opt-in scale path for the gate's parent-delete leg (the lake
@@ -202,12 +203,8 @@ class DagApplyJob:
         self.writer_id = writer_id
         self.fk_check = fk_check
         self.on_violation = on_violation
-        self.max_stage_threads = max_stage_threads
         self.gate = gate
         self.quarantine_dir = quarantine_dir
-        # ops/debug escape hatch (and the A/B lever test_dag.py uses):
-        # False forces every window down the sequential per-epoch path
-        self.enable_fast_path = True
         # Gate cost model: key-filtering a parent probe below its MOR
         # resolution only pays when the parent is LARGE — the filter costs
         # an extra materialization job (the window's referenced values must
@@ -362,9 +359,7 @@ class DagApplyJob:
             typed: dict[str, DataFrame] = {}
             # fast path: SCHEMA-free window — the shape of virtually every
             # steady-state window (evolutions are rare)
-            fast = self.enable_fast_path and not any(
-                markers[name] for name in self.order if name in present
-            )
+            fast = not any(markers[name] for name in self.order if name in present)
             gate_buckets: dict[str, list[int]] = {}
             gated = False
             if fast:
@@ -503,7 +498,7 @@ class DagApplyJob:
         n_rej: dict[str, int] = {}
         walls: dict[str, float] = {}
         errors: dict[str, BaseException] = {}
-        sem = threading.Semaphore(self.max_stage_threads)
+        sem = threading.Semaphore(_MAX_STAGE_THREADS)
 
         def _stage(name: str, job: CDCApplyJob, snap: dict) -> None:
             t0 = time.monotonic()

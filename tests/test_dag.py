@@ -593,33 +593,68 @@ def test_dag_on_violation_record_advances_past_poison_window(spark, tmp_root):
 
 def test_dag_fast_and_sequential_paths_fence_each_other(spark, tmp_root, cog_events):
     """A window applied by the fast path and replayed through the
-    sequential path (or vice versa) must fence to a no-op — the composite
-    fence ids are identical (batch_id*1024 + epoch)."""
-    log = _write_log(spark, tmp_root, cog_events)
+    sequential path must fence to a no-op — the composite fence ids are
+    identical (batch_id*1024 + epoch). The path switch is the window's
+    content: a SCHEMA event for a table the first DAG does not own leaves
+    that DAG on the fast path, while a DAG that owns the table replays the
+    same window sequentially."""
+    canton = [
+        (
+            "SCHEMA", "canton", None, 2,
+            json.dumps({"action": "add_column", "name": "area", "type": "double"}),
+        ),
+        ("I", "canton", {"code": "K1", "name": "K", "area": 1.5}),
+    ]
+    cog = cog_events.assign(lsn=cog_events["lsn"] + len(canton))
+    log = _write_log(spark, tmp_root, pd.concat([_envelope(canton), cog], ignore_index=True))
     jobs, dag = _mk_dag(spark, tmp_root)
-    ckpt = CheckpointStore(os.path.join(tmp_root, "ck.json"))
+
+    def fast_windows(d):
+        ids = []
+        fast = d._apply_window_fast
+
+        def spy(window, present, ops, batch_id, *args):
+            ids.append(batch_id)
+            return fast(window, present, ops, batch_id, *args)
+
+        d._apply_window_fast = spy
+        return ids
+
     n = log.max_lsn() + 1
-    # window 0 via the FAST path
-    dag.run_incremental(log, ckpt, batch_lsns=n // 2 + 1, max_batches=1)
-    state_after_w0 = {r["code"]: r["name"] for r in jobs["region"].table.read().collect()}
-    # replay window 0 via the SEQUENTIAL path (fresh checkpoint, same ids)
-    dag.enable_fast_path = False
-    results = dag.run_incremental(
+    # window 0 via the FAST path: the canton SCHEMA event is not this DAG's
+    fast_ids = fast_windows(dag)
+    dag.run_incremental(
+        log, CheckpointStore(os.path.join(tmp_root, "ck.json")),
+        batch_lsns=n // 2 + 1, max_batches=1,
+    )
+    assert fast_ids == [0]
+    # replay window 0 via the SEQUENTIAL path (fresh checkpoint, same ids):
+    # this DAG owns canton, so the SCHEMA event routes the window to apply_batch
+    t = LakeTable.create(
+        spark, os.path.join(tmp_root, "canton"), REGION, ["code"], num_buckets=4
+    )
+    owner = DagApplyJob({**jobs, "canton": CDCApplyJob(spark, t)}, EDGES, writer_id="dag")
+    fast_ids = fast_windows(owner)
+    results = owner.run_incremental(
         log, CheckpointStore(os.path.join(tmp_root, "ck2.json")),
         batch_lsns=n // 2 + 1,
     )
-    assert all(br.merge.fenced for br in results[0].tables.values())  # replayed w0
+    assert fast_ids == [1]  # window 0 sequential, window 1 fast
+    w0 = results[0].tables
+    assert all(w0[name].merge.fenced for name in jobs)  # replayed w0
+    assert not w0["canton"].merge.fenced
     assert any(
         not br.merge.fenced for br in results[1].tables.values()
     )  # fresh w1 applies
-    dag.enable_fast_path = True
     # final state matches the oracle regardless of the mixed paths
     oracle = expected_cog_state(cog_events)
     got = _table_pdf(jobs["commune"])
     pd.testing.assert_frame_equal(
         got, oracle["commune"].astype({"population": "int64"})[got.columns]
     )
-    assert state_after_w0  # sanity: window 0 did something
+    assert [r.asDict() for r in t.read().collect()] == [
+        {"code": "K1", "name": "K", "area": 1.5}
+    ]
 
 
 def _mk_dag_pre(spark, tmp_root, on_violation="halt"):

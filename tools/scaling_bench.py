@@ -19,7 +19,8 @@ Throughput scaling efficiency = tput(4N) / (4 × tput(N)) — the classic
 weak-scaling form used for ingest systems: 4× the workers should sustain
 4× the events/sec. Each worker is a separate JVM (own GC/shuffle domains,
 like real executors), warms up JIT/codegen on a throwaway table before its
-timed window, and runs best-of-N trials to de-noise the shared host.
+timed window, and the two configs run in interleaved rounds to de-noise
+the shared host (``interleaved_rounds``).
 
 Caveat recorded in BASELINE.md: all workers share one machine's memory
 bandwidth and disk, so this UNDERSTATES what distinct cluster nodes give.
@@ -165,18 +166,6 @@ def run_config(part_dirs: list[str], cores: int, work: str, batches: int) -> dic
         "final_rows": sum(o["final_rows"] for o in outs),
         "per_worker": outs,
     }
-
-
-def best_of(trials: int, part_dirs, cores, workbase, batches) -> dict:
-    best = None
-    for t in range(trials):
-        tdir = f"{workbase}_t{t}"
-        r = run_config(part_dirs, cores, tdir, batches)
-        shutil.rmtree(tdir, ignore_errors=True)
-        if best is None or r["events_per_sec"] > best["events_per_sec"]:
-            best = r
-    best["trials"] = trials
-    return best
 
 
 def interleaved_rounds(rounds: int, part_dirs, cores, work, batches):
