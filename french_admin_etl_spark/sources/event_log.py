@@ -6,16 +6,15 @@ log stored as parquet (stand-in for a binlog/WAL topic — at cluster scale
 the same code reads an Iceberg/ Kafka source; only this module changes).
 
 Two access patterns:
-- **LSN-windowed incremental batches** (``batches_by_lsn``): deterministic,
-  replayable slices for the incremental batch driver — scan pruned by the
-  ``lsn`` range predicate (parquet min/max row-group stats make this cheap).
+- **LSN windows** (``lsn_range``): the incremental drivers pin each
+  window's upper bound (``pending_hi``) in their checkpoint before
+  applying it, so a replay reads the identical slice; the scan is pruned
+  by the ``lsn`` range predicate (parquet min/max row-group stats).
 - **Structured Streaming** (``read_stream``): file-source stream over the
   log directory for the foreachBatch pipeline.
 """
 
 from __future__ import annotations
-
-from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -77,9 +76,6 @@ class LsnLog:
 class EventLog(LsnLog):
     SCHEMA = EVENT_SCHEMA
 
-    def count_events(self) -> int:
-        return self.read().count()
-
     def event_balanced_bounds(self, batch_events: int, start_lsn: int = 0) -> list[int]:
         """LSN window boundaries that split the log (from ``start_lsn``)
         into batches of ~``batch_events`` events EACH, regardless of how
@@ -119,12 +115,3 @@ class EventLog(LsnLog):
         if mx + 1 > bounds[-1]:
             bounds.append(mx + 1)
         return bounds
-
-    def batches_by_lsn(self, batch_lsns: int, start_lsn: int = 0) -> Iterator[tuple[int, int, DataFrame]]:
-        """Yield (lo, hi, df) windows of width batch_lsns up to max lsn."""
-        hi_all = self.max_lsn() + 1
-        lo = start_lsn
-        while lo < hi_all:
-            hi = lo + batch_lsns
-            yield lo, hi, self.lsn_range(lo, hi)
-            lo = hi

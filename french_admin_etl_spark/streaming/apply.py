@@ -11,11 +11,17 @@ pipeline (``cmd/main.go:110-120`` → processor → transformer → repository):
         → MERGE INTO LakeTable with batch-id fencing (S6/S7/S8/T5)
         → per-bucket lineage + throughput metrics (S10/A2/A3)
 
-Both drivers share ``apply_batch``:
+Three drivers share ``apply_batch``:
 - ``run_incremental``: deterministic LSN-windowed batches with a JSON
   checkpoint (replay from any checkpoint reconverges — north_rule).
+- ``run_incremental_balanced``: event-balanced windows whose planned
+  bounds ride the checkpoint.
 - ``run_stream``: Structured Streaming foreachBatch over the log directory
   (file-source checkpointing; the same fence makes epoch replays no-ops).
+
+The FK-ordered multi-table driver (``streaming.dag``) runs the same steps
+through the two halves of a batch, :meth:`CDCApplyJob.stage` and
+:meth:`CDCApplyJob.commit`, so it can stage several tables at once.
 """
 
 from __future__ import annotations
@@ -26,6 +32,7 @@ import time
 from dataclasses import dataclass
 from functools import reduce
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -35,7 +42,14 @@ from french_admin_etl_spark.operators.dedup import dedup_coalesce, dedup_max_seq
 from french_admin_etl_spark.operators.validate import validate_split
 from french_admin_etl_spark.sources.event_log import EventLog
 from french_admin_etl_spark.streaming.checkpoint import CheckpointStore
-from french_admin_etl_spark.table.lake_table import LakeTable, MergeStats, SchemaOp
+from french_admin_etl_spark.table.lake_table import (
+    LakeTable,
+    MergeStats,
+    SchemaOp,
+    StagedMerge,
+    _bucket_expr,
+    is_fenced,
+)
 
 REPOS_SCHEMA = T.StructType(
     [
@@ -90,9 +104,8 @@ def validation_rules(
 
 def valid_predicate(rules: dict):
     """Single formulation of "event passes every validation rule" (null
-    rule results fail, matching ``validate_split``). Shared by
-    ``apply_batch``'s reject predicate and the DAG FK gate so the two
-    sites cannot drift (reviewer finding)."""
+    rule results fail, matching ``validate_split``), for the reject
+    count."""
     return F.coalesce(reduce(lambda a, b: a & b, rules.values()), F.lit(False))
 
 
@@ -104,6 +117,53 @@ class BatchResult:
     merge: MergeStats | None
     schema_evolutions: int
     wall_ms: int
+
+
+@dataclass
+class StagedBatch:
+    """One table's batch between :meth:`CDCApplyJob.stage` and
+    :meth:`CDCApplyJob.commit`: validated, deduped and staged, not yet
+    visible. ``replayed`` holds the finished result instead when the
+    table fence already covers the batch."""
+
+    batch_id: int
+    n_events: int
+    fence_writer: str | None
+    valid: DataFrame
+    rejects: DataFrame
+    n_rejects: int = 0
+    source: DataFrame | None = None  # persisted in coalesce mode
+    merge: StagedMerge | None = None
+    stage_s: float = 0.0
+    replayed: BatchResult | None = None
+
+    def release(self) -> None:
+        """Drop the source's cache: after the commit, or when the batch
+        is quarantined or abandoned. Idempotent."""
+        if self.source is not None:
+            self.source.unpersist()
+
+
+def _fence_id(batch_id: int, sub: int) -> int:
+    """The table fence id of schema epoch ``sub`` of a batch: epochs share
+    the batch fence through a composite id, so a replay skips exactly the
+    epochs already committed."""
+    if sub >= 1024:
+        # the composite fence encodes sub in 10 bits; epoch 1024 of batch
+        # B would reuse batch B+1's fence ids and silently drop its first
+        # epochs on replay — fail loudly instead (a batch carrying >=1024
+        # SCHEMA events must be split upstream)
+        raise ValueError(
+            f"batch {batch_id} carries >=1024 schema epochs; composite "
+            "fence ids would collide with the next batch — use smaller "
+            "batch windows"
+        )
+    return batch_id * 1024 + sub
+
+
+def _partition(sink: str, batch_id: int) -> str:
+    """A batch's directory in an audit sink (dead-letter or lineage)."""
+    return os.path.join(sink, f"batch_id={batch_id}")
 
 
 class CDCApplyJob:
@@ -133,7 +193,7 @@ class CDCApplyJob:
 
     # ------------------------------------------------------------- per batch
 
-    def _payload_cols(self, df: DataFrame) -> list[str]:
+    def _payload_cols(self, df: DataFrame, snap: dict) -> list[str]:
         """Logical non-key columns the validation rules may reference:
         restricted to columns actually present in the incoming events
         (older events predate added columns) and excluding the derived
@@ -146,7 +206,6 @@ class CDCApplyJob:
         update (two reviewer findings, opposite directions). The marker
         scan is a pushed-filter job that runs only when unknown columns
         are present at all — the rare evolution-in-batch case."""
-        snap = self.table.snapshot()
         logical = [
             f["name"] for f in snap["schemas"][str(snap["schema_version"])]["fields"]
         ]
@@ -157,8 +216,6 @@ class CDCApplyJob:
             if c not in logical and c not in meta and not c.startswith("_")
         ]
         if extra and "props" in df.columns:
-            import json
-
             introduced = set()
             for r in (
                 df.filter(F.col("op") == "SCHEMA").select("props").collect()
@@ -177,25 +234,47 @@ class CDCApplyJob:
             if c not in self.keys and c != "content_sha" and c in df.columns
         ]
 
-    def _normalize(self, df: DataFrame) -> DataFrame:
-        """Project to MERGE-source shape + derived sha (vectorized; never
-        per-row Python).
+    def _prepare(self, events: DataFrame, snap: dict):
+        """Validation, shared by every apply path: ``(observed, valid,
+        rejects, obs)``. ``obs`` counts the events and the rejects on the
+        first job that runs over ``observed`` or a frame derived from it,
+        so the counts ride a job the caller runs anyway — no count() jobs.
+        SCHEMA rows are neither valid nor rejected."""
+        rules = validation_rules(self.merge_mode, self.keys, self._payload_cols(events, snap))
+        is_data = F.col("op") != "SCHEMA"
+        obs = Observation()
+        observed = events.observe(
+            obs,
+            F.count(F.lit(1)).alias("n_events"),
+            F.sum((is_data & ~valid_predicate(rules)).cast("long")).alias("n_rejects"),
+        )
+        valid, rejects = validate_split(observed.filter(is_data), rules, cache=False)
+        return observed, valid, rejects, obs
 
-        The sha is JVM ``sha2`` (whole-stage codegen)."""
+    def _source(self, valid: DataFrame, snap: dict) -> DataFrame:
+        """One slice's MERGE source: projected to the table's columns with
+        the derived sha (JVM ``sha2``, whole-stage codegen; never per-row
+        Python) and deduped to one row per key. Coalesce mode folds
+        intra-batch PARTIAL updates per column (``dedup_max_seq`` would
+        keep only the max-LSN row, dropping columns set by earlier events)
+        and PERSISTS the result: staging reads it twice (the delta rows and
+        the barrier union of intra-batch deletes), and re-running the
+        dedup shuffle + sha per read would double the work. The caller
+        unpersists it once the slice is committed or dropped."""
         sha = F.when(F.col("content").isNotNull(), content_sha("content"))
-        snap = self.table.snapshot()  # once: listdir + full JSON parse per call
-        logical = [
-            f["name"] for f in snap["schemas"][str(snap["schema_version"])]["fields"]
-        ]
         cols = [F.col("lsn"), F.col("op")]
-        for c in logical:
+        for f in snap["schemas"][str(snap["schema_version"])]["fields"]:
+            c = f["name"]
             if c == "content_sha":
                 cols.append(sha.alias("content_sha"))
-            elif c in df.columns:
+            elif c in valid.columns:
                 cols.append(F.col(c))
             else:  # column added by schema evolution, absent in older events
                 cols.append(F.lit(None).alias(c))
-        return df.select(*cols)
+        normalized = valid.select(*cols)
+        if self.merge_mode == "coalesce":
+            return dedup_coalesce(normalized, self.keys, "lsn", "op").persist()
+        return dedup_max_seq(normalized, self.keys, "lsn")
 
     def _apply_schema_event(self, ev_row) -> bool:
         """Apply one SCHEMA event idempotently: skip when the table has
@@ -228,122 +307,166 @@ class CDCApplyJob:
         against one table/checkpoint can never fence each other out."""
         t0 = time.monotonic()
         # the batch has 2-3 consumers (schema-marker collect + counts, the
-        # merge pipeline, lineage): materialize it once in executor memory
+        # merge pipeline, lineage): materialize it once in executor memory.
+        # The finally releases it even when a stage fails mid-batch — a
+        # driver retrying batches in a loop would otherwise accumulate one
+        # orphaned cached frame per failed attempt
         events = events.cache()
         try:
-            return self._apply_batch_inner(events, batch_id, fence_writer, t0)
-        finally:
-            # release the batch cache even when a stage fails mid-batch —
-            # a driver retrying batches in a loop would otherwise
-            # accumulate one orphaned cached frame per failed attempt
-            # (review finding); unpersist on an uncached frame is a no-op
-            events.unpersist()
-
-    def _apply_batch_inner(
-        self, events: DataFrame, batch_id: int, fence_writer: str | None, t0: float
-    ) -> BatchResult:
-        # 1. one driver action does triple duty: collect the SCHEMA markers
-        #    (applied in LSN order; data events split into schema epochs so
-        #    evolution lands between the right events — SURVEY §7 hard-part
-        #    3), materialize the cache, and piggyback batch/reject counts as
-        #    observed metrics — no separate count() jobs per batch.
-        rules = validation_rules(self.merge_mode, self.keys, self._payload_cols(events))
-        is_data = F.col("op") != "SCHEMA"
-        reject_pred = is_data & ~valid_predicate(rules)
-        obs = Observation()
-        schema_events = sorted(
-            events.observe(
-                obs,
-                F.count(F.lit(1)).alias("n_events"),
-                F.sum(reject_pred.cast("long")).alias("n_rejects"),
+            # 1. one driver action does triple duty: collect the SCHEMA
+            #    markers (applied in LSN order; data events split into schema
+            #    epochs so evolution lands between the right events — SURVEY
+            #    §7 hard-part 3), materialize the cache, and fill the counts
+            snap = self.table.snapshot()
+            observed, valid, rejects, obs = self._prepare(events, snap)
+            schema_events = sorted(
+                observed.filter(F.col("op") == "SCHEMA").collect(), key=lambda r: r["lsn"]
             )
-            .filter(F.col("op") == "SCHEMA")
-            .collect(),
-            key=lambda r: r["lsn"],
-        )
-        got = obs.get
-        n_events = int(got["n_events"] or 0)
-        n_rejects = int(got["n_rejects"] or 0)
-        data = events.filter(is_data)
+            n_events = int(obs.get["n_events"] or 0)
+            fence_writer = self.writer_id if fence_writer is None else fence_writer
+            # the last epoch commits after every other epoch and SCHEMA
+            # event, so once it is fenced the whole batch is a replay
+            last = _fence_id(batch_id, len(schema_events))
+            if is_fenced(snap["properties"], last, fence_writer):
+                stats = MergeStats(last, snap["version"], 0, 0, 0, fenced=True)
+                return self._replayed(valid, rejects, batch_id, n_events, stats)
 
-        # 2. validate-and-split (dead-letter rejects; batch survives — P5/S9)
-        valid, rejects = validate_split(data, rules, cache=False)
-        if n_rejects and self.dead_letter_dir:
-            self._write_dead_letter(rejects, batch_id)
+            # 2. dead-letter the rejects before any commit (P5/S9)
+            n_rejects = int(obs.get["n_rejects"] or 0)
+            if n_rejects and self.dead_letter_dir:
+                self._write_dead_letter(rejects, batch_id)
 
-        evolutions = 0
-        merge_stats: MergeStats | None = None
-        epochs: list[tuple[DataFrame, object]] = []
-        lo = None
-        for ev in schema_events:
-            epochs.append((valid.filter(F.col("lsn") < ev["lsn"]) if lo is None
-                           else valid.filter((F.col("lsn") >= lo) & (F.col("lsn") < ev["lsn"])), ev))
-            lo = ev["lsn"]
-        tail = valid if lo is None else valid.filter(F.col("lsn") >= lo)
+            # 3. one fenced MERGE per schema epoch, each SCHEMA event between
+            evolutions = 0
+            merge_stats: MergeStats | None = None
+            for sub, ev in enumerate([*schema_events, None]):
+                part = valid
+                if sub:
+                    part = part.filter(F.col("lsn") >= schema_events[sub - 1]["lsn"])
+                if ev is not None:
+                    part = part.filter(F.col("lsn") < ev["lsn"])
+                # epoch 0 runs under the batch's opening schema; later ones
+                # read the schema their SCHEMA event left
+                stats = self._merge_epoch(
+                    part, batch_id, sub, fence_writer, None if sub else snap
+                )
+                if merge_stats is not None and not stats.fenced:
+                    stats.rows_upserted += merge_stats.rows_upserted
+                    stats.rows_deleted += merge_stats.rows_deleted
+                if merge_stats is None or not stats.fenced:
+                    merge_stats = stats
+                if ev is not None and self._apply_schema_event(ev):
+                    evolutions += 1
 
-        fence_writer = self.writer_id if fence_writer is None else fence_writer
-        sub = 0
-        for epoch_df, schema_ev in epochs:
-            merge_stats = self._merge_epoch(epoch_df, batch_id, sub, merge_stats, fence_writer)
-            sub += 1
-            if self._apply_schema_event(schema_ev):
-                evolutions += 1
-        merge_stats = self._merge_epoch(tail, batch_id, sub, merge_stats, fence_writer)
-
-        wall_ms = int((time.monotonic() - t0) * 1000)
-        if self.lineage_dir and merge_stats is not None:
+            wall_ms = int((time.monotonic() - t0) * 1000)
             self._write_lineage(valid, batch_id, merge_stats, wall_ms)
-        return BatchResult(batch_id, n_events, n_rejects, merge_stats, evolutions, wall_ms)
+            return BatchResult(batch_id, n_events, n_rejects, merge_stats, evolutions, wall_ms)
+        finally:
+            events.unpersist()
 
     def _merge_epoch(
         self,
-        df: DataFrame,
+        valid: DataFrame,
         batch_id: int,
         sub: int,
-        prev: MergeStats | None,
-        fence_writer: str | None = None,
-    ) -> MergeStats | None:
-        """Dedup + MERGE one schema epoch. Sub-batches share the batch fence
-        through a composite id (batch_id * 1024 + sub) so replay skips
-        exactly the epochs already committed."""
-        if sub >= 1024:
-            # the composite fence encodes sub in 10 bits; epoch 1024 of
-            # batch B would reuse batch B+1's fence ids and silently drop
-            # its first epochs on replay — fail loudly instead (a batch
-            # carrying >=1024 SCHEMA events must be split upstream)
-            raise ValueError(
-                f"batch {batch_id} carries >=1024 schema epochs; composite "
-                "fence ids would collide with the next batch — use smaller "
-                "batch windows"
-            )
-        normalized = self._normalize(df)
-        # persist the deduped MERGE source: the stage write reads it twice
-        # in coalesce mode (the delta rows and _build_mor_delta's barrier
-        # union), and _restage_on_layout_change reads it again when a
-        # rebucket races the commit; re-running the dedup shuffle + sha
-        # for each read would multiply the work.
-        # coalesce mode folds intra-batch PARTIAL updates per column
-        # (dedup_max_seq would keep only the max-LSN row, dropping columns
-        # set by earlier events in the same batch)
-        if self.merge_mode == "coalesce":
-            deduped = dedup_coalesce(normalized, self.keys, "lsn", "op").persist()
-        else:
-            deduped = dedup_max_seq(normalized, self.keys, "lsn").persist()
+        fence_writer: str | None,
+        snap: dict | None = None,
+    ) -> MergeStats:
+        """Dedup + MERGE schema epoch ``sub`` of a batch under its
+        composite fence id (see :func:`_fence_id`)."""
+        fid = _fence_id(batch_id, sub)
+        source = self._source(valid, snap or self.table.snapshot())
         try:
-            stats = self.table.merge(
-                deduped,
-                seq_col="lsn",
-                op_col="op",
-                batch_id=batch_id * 1024 + sub,
-                mode=self.merge_mode,
-                writer_id=fence_writer if fence_writer is not None else self.writer_id,
+            return self.table.merge(
+                source, "lsn", "op", fid, self.merge_mode, writer_id=fence_writer
             )
         finally:
-            deduped.unpersist()
-        if prev is not None and not stats.fenced:
-            stats.rows_upserted += prev.rows_upserted
-            stats.rows_deleted += prev.rows_deleted
-        return stats if not stats.fenced else (prev or stats)
+            source.unpersist()
+
+    def stage(
+        self, events: DataFrame, batch_id: int, n_events: int, fence_writer: str | None = None
+    ) -> StagedBatch:
+        """Stage half of :meth:`apply_batch` for a batch with no SCHEMA
+        event: validate, normalize, dedup and write the delta file groups
+        — every distributed job of the batch, the reject count riding the
+        stage write — with nothing visible until :meth:`commit`. A
+        multi-table driver stages several tables at once. The fence id is
+        ``apply_batch``'s for a batch of one epoch, so either path fences
+        the other's replays. ``n_events`` is the caller's count of
+        ``events`` (a fenced replay runs no job to count them)."""
+        t0 = time.monotonic()
+        fence_writer = self.writer_id if fence_writer is None else fence_writer
+        fid = _fence_id(batch_id, 0)
+        snap = self.table.snapshot()
+        _observed, valid, rejects, obs = self._prepare(events, snap)
+        st = StagedBatch(batch_id, n_events, fence_writer, valid, rejects)
+        if is_fenced(snap["properties"], fid, fence_writer):
+            stats = MergeStats(fid, snap["version"], 0, 0, 0, fenced=True)
+            st.replayed = self._replayed(valid, rejects, batch_id, n_events, stats)
+            return st
+        st.source = self._source(valid, snap)
+        try:
+            st.merge = self.table.stage_merge(st.source, "lsn", "op", self.merge_mode)
+        except BaseException:
+            st.release()
+            raise
+        st.n_rejects = int(obs.get["n_rejects"] or 0)
+        st.stage_s = time.monotonic() - t0
+        return st
+
+    def commit(self, st: StagedBatch) -> BatchResult:
+        """Commit half of :meth:`stage`: the dead-letter partition before
+        the fenced commit and lineage after it (``apply_batch``'s order),
+        releasing the staged source."""
+        if st.replayed is not None:
+            return st.replayed
+        t0 = time.monotonic()
+        fid = _fence_id(st.batch_id, 0)
+        try:
+            if st.n_rejects and self.dead_letter_dir:
+                self._write_dead_letter(st.rejects, st.batch_id)
+            if st.merge is None:  # empty after validation: no commit, no fence
+                stats = MergeStats(fid, self.table.snapshot()["version"], 0, 0, 0)
+            else:
+                stats = self.table.commit_merge(st.merge, fid, st.fence_writer)
+        finally:
+            st.release()
+        wall_ms = int((st.stage_s + time.monotonic() - t0) * 1000)
+        self._write_lineage(st.valid, st.batch_id, stats, wall_ms)
+        return BatchResult(st.batch_id, st.n_events, st.n_rejects, stats, 0, wall_ms)
+
+    def _replayed(
+        self,
+        valid: DataFrame,
+        rejects: DataFrame,
+        batch_id: int,
+        n_events: int,
+        stats: MergeStats,
+    ) -> BatchResult:
+        """A batch the table fence already covers: a crash replay, on any
+        driver path. Nothing is restaged. The original attempt may have
+        crashed before an audit write landed (lineage is written after the
+        commit), so each sink's ``batch_id=<id>/`` partition is written
+        again only when it is missing — one extra job, on crash replays
+        only; a batch without rejects backfills one empty dead-letter
+        partition. A backfilled lineage row carries the current snapshot
+        version and ``wall_ms=0``: the commit's own are not recoverable.
+        The reject count comes from the dead-letter partition's parquet
+        footers (driver-side, no job); without that sink it is 0."""
+        dl, lin = self.dead_letter_dir, self.lineage_dir
+        if dl and not os.path.isdir(_partition(dl, batch_id)):
+            self._write_dead_letter(rejects, batch_id)
+        if lin and not os.path.isdir(_partition(lin, batch_id)):
+            self._write_lineage(valid, batch_id, stats, 0)
+        n_rejects = 0
+        if dl:
+            part = _partition(dl, batch_id)
+            n_rejects = sum(
+                pq.ParquetFile(os.path.join(part, f)).metadata.num_rows
+                for f in os.listdir(part)
+                if f.endswith(".parquet")
+            )
+        return BatchResult(batch_id, n_events, n_rejects, stats, 0, 0)
 
     def _write_dead_letter(self, rejects: DataFrame, batch_id: int) -> None:
         """Quarantine a batch's rejects under ``batch_id=<id>/`` with
@@ -353,19 +476,17 @@ class CDCApplyJob:
         duplicates — the fenced table merge was exactly-once but the
         append-mode audit sink was not (review finding). Readers recover
         ``batch_id`` as a partition column from the directory name."""
-        rejects.write.mode("overwrite").parquet(
-            os.path.join(self.dead_letter_dir, f"batch_id={batch_id}")
-        )
+        rejects.write.mode("overwrite").parquet(_partition(self.dead_letter_dir, batch_id))
 
     def _write_lineage(
         self, valid: DataFrame, batch_id: int, stats: MergeStats, wall_ms: int
     ) -> None:
         """Per-bucket lineage: LSN range + op counts (§1.5; the structured
-        version of csv_processor.go:131's throughput log line)."""
-        from french_admin_etl_spark.table.lake_table import _bucket_expr
-
-        snap = self.table.snapshot()
-        nb = snap["num_buckets"]
+        version of csv_processor.go:131's throughput log line). No-op
+        without a lineage sink."""
+        if not self.lineage_dir:
+            return
+        nb = self.table.snapshot()["num_buckets"]
         lineage = (
             # the table's OWN bucket expression — an inline twin would
             # silently drift from real bucket ids if routing ever changed
@@ -384,9 +505,7 @@ class CDCApplyJob:
         # replaying a batch rewrites batch_id=<id>/ instead of appending a
         # second copy of its lineage rows; batch_id rides the directory
         # name and comes back as a partition column
-        lineage.write.mode("overwrite").parquet(
-            os.path.join(self.lineage_dir, f"batch_id={batch_id}")
-        )
+        lineage.write.mode("overwrite").parquet(_partition(self.lineage_dir, batch_id))
 
     # ---------------------------------------------------------------- drivers
 

@@ -35,7 +35,7 @@ from pyspark.sql import functions as F
 
 from french_admin_etl_spark.operators.dedup import dedup_max_seq
 from french_admin_etl_spark.streaming.checkpoint import CheckpointStore
-from french_admin_etl_spark.table.lake_table import LakeTable, MergeStats
+from french_admin_etl_spark.table.lake_table import LakeTable, MergeStats, is_fenced
 
 
 @dataclass
@@ -133,10 +133,8 @@ class CascadeJob:
                 # until the checkpoint is hand-edited (review finding; the
                 # aggview sync handles the same class). Whether the pending
                 # merge COMMITTED decides the recovery:
-                fence = self.target.snapshot()["properties"].get(
-                    f"last_batch_id.{self.writer_id}"
-                )
-                if fence is not None and fence >= batch_id:
+                props = self.target.snapshot()["properties"]
+                if is_fenced(props, batch_id, self.writer_id):
                     # it landed — only the checkpoint write was lost; advance
                     # past it and let the next run plan a fresh window
                     checkpoint.save({"from_version": cur, "batch_id": batch_id + 1})

@@ -18,16 +18,17 @@ window — tables 1..k fence to no-ops, tables k+1.. apply, and the stream
 converges with no double-apply and no gap. One checkpoint therefore
 covers the whole DAG.
 
-Per-window cost: for the common window shape (no SCHEMA events) the
-driver takes the FAST PATH — ONE combined scan collects every table's op
-counts and schema markers, each present table's dedup + delta stage
-write (the distributed jobs) run CONCURRENTLY in driver threads, and
-only the commits (driver-side metadata writes) run sequentially in FK
-order. Stage order is free because staged files are invisible until
-their commit; commit order is what the integrity contract needs. Windows
-that carry SCHEMA events fall back to the sequential per-epoch
-``apply_batch`` path, which splits each table's window at its evolution
-points.
+Per-window cost: ONE combined scan collects every table's op counts and
+schema markers. Each table then runs the same per-table pipeline as the
+single-table drivers, :class:`CDCApplyJob`'s, split in its two halves:
+every present table's ``stage`` (validate, dedup, delta stage write —
+the distributed jobs) runs CONCURRENTLY in driver threads, and only the
+``commit`` halves (driver-side metadata writes plus the audit sinks) run
+sequentially in FK order. Stage order is free because staged files are
+invisible until their commit; commit order is what the integrity
+contract needs. A window that carries a SCHEMA event for an owned table
+runs ``apply_batch`` per table instead, which splits each table's window
+at its evolution points.
 
 FK gates (both broadcast-shaped — the parent/probe side of every join is
 the small side, so at 100 TB these are map-side filters, never shuffles):
@@ -51,8 +52,9 @@ The per-window gate runs in one of two placements (``gate=``):
   ``WindowResult`` and advances so the stream keeps flowing, with
   ``deep_fk_check`` as the audit.
 - ``'pre'`` (round 4 — write-audit-publish semantics without branch
-  files): the fast path already separates staging from committing, so
-  its staged-but-uncommitted file groups ARE an implicit WAP branch.
+  files): a SCHEMA-free window already separates staging from
+  committing, so its staged-but-uncommitted file groups ARE an implicit
+  WAP branch.
   The gate runs between the two, against SYNTHETIC snapshots (current
   state + staged groups — exactly the state the commits would publish),
   and the commits happen only if every edge is clean. The gate
@@ -71,23 +73,15 @@ import time
 from dataclasses import dataclass, field
 from graphlib import CycleError, TopologicalSorter
 
-from pyspark.sql import DataFrame, Observation, functions as F
+from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
-from french_admin_etl_spark.operators.dedup import dedup_coalesce, dedup_max_seq
 from french_admin_etl_spark.operators.dim_join import fk_orphans
-from french_admin_etl_spark.operators.validate import validate_split
 from french_admin_etl_spark.sources.envelope_log import MultiTableLog
-from french_admin_etl_spark.streaming.apply import (
-    BatchResult,
-    CDCApplyJob,
-    valid_predicate,
-    validation_rules,
-)
+from french_admin_etl_spark.streaming.apply import BatchResult, CDCApplyJob, StagedBatch
 from french_admin_etl_spark.streaming.checkpoint import CheckpointStore
-from french_admin_etl_spark.table.lake_table import MergeStats
 
-# concurrent stage writes per fast-path window
+# concurrent stage writes per SCHEMA-free window
 _MAX_STAGE_THREADS = 8
 
 
@@ -115,24 +109,6 @@ class FKViolation(AssertionError):
     pass
 
 
-def _dl_partition_rows(dead_letter_dir: str | None, batch_id: int) -> int:
-    """Row count of a batch's dead-letter partition straight from the
-    parquet footers — driver-side file metadata, no Spark job. 0 when the
-    sink is unconfigured or the partition is absent."""
-    if not dead_letter_dir:
-        return 0
-    part = os.path.join(dead_letter_dir, f"batch_id={batch_id}")
-    if not os.path.isdir(part):
-        return 0
-    import pyarrow.parquet as pq
-
-    total = 0
-    for fname in os.listdir(part):
-        if fname.endswith(".parquet"):
-            total += pq.ParquetFile(os.path.join(part, fname)).metadata.num_rows
-    return total
-
-
 class DagApplyJob:
     def __init__(
         self,
@@ -155,8 +131,8 @@ class DagApplyJob:
 
         - ``'post'`` (default): apply, then check — the gate DETECTS; a
           violating window's rows are briefly visible even under 'halt'.
-        - ``'pre'`` (write-audit-publish semantics): the fast path's
-          staged-but-uncommitted file groups ARE an implicit WAP branch,
+        - ``'pre'`` (write-audit-publish semantics): a SCHEMA-free
+          window's staged-but-uncommitted file groups ARE an implicit WAP branch,
           so the gate runs against SYNTHETIC snapshots (current state +
           staged groups — exactly what the commits would publish) and
           the commits happen only if every edge is clean. The gate
@@ -357,13 +333,14 @@ class DagApplyJob:
                 if r["op"] == "SCHEMA" and r["table"] in self.jobs:
                     markers[r["table"]].extend(r["schema_rows"])
             typed: dict[str, DataFrame] = {}
-            # fast path: SCHEMA-free window — the shape of virtually every
-            # steady-state window (evolutions are rare)
-            fast = not any(markers[name] for name in self.order if name in present)
+            # a SCHEMA-free window — the shape of virtually every
+            # steady-state window (evolutions are rare) — stages all its
+            # tables at once; the others split at their evolution points
+            schema_free = not any(markers[name] for name in self.order if name in present)
             gate_buckets: dict[str, list[int]] = {}
             gated = False
-            if fast:
-                gated = self._apply_window_fast(
+            if schema_free:
+                gated = self._apply_window_staged(
                     window, present, ops, batch_id, ns, res, typed, gate_buckets
                 )
             else:
@@ -394,33 +371,7 @@ class DagApplyJob:
                 window.unpersist()
         return res
 
-    def _audit_backfill(
-        self, job: CDCApplyJob, data: DataFrame, batch_id: int, stats: MergeStats
-    ) -> None:
-        """Crash-replay audit repair for the fast path: the table's merge
-        is already fenced, so staging never re-runs — but the original
-        attempt may have crashed before an audit write landed. Recompute
-        and rewrite ONLY the missing ``batch_id=<id>/`` partitions (both
-        sinks are per-batch overwrite directories, so the rewrite is
-        idempotent; a batch with zero rejects backfills one empty
-        partition the first time and probes as present after that). The
-        backfilled lineage row carries the CURRENT snapshot version (the
-        original commit version is not recoverable from a fenced replay)
-        and wall_ms=0 — disclosed rather than fabricated."""
-        dl = job.dead_letter_dir
-        lin = job.lineage_dir
-        need_dl = dl and not os.path.isdir(os.path.join(dl, f"batch_id={batch_id}"))
-        need_lin = lin and not os.path.isdir(os.path.join(lin, f"batch_id={batch_id}"))
-        if not (need_dl or need_lin):
-            return
-        rules = validation_rules(job.merge_mode, job.keys, job._payload_cols(data))
-        valid, rej = validate_split(data, rules, cache=False)
-        if need_dl:
-            job._write_dead_letter(rej, batch_id)
-        if need_lin:
-            job._write_lineage(valid, batch_id, stats, 0)
-
-    def _apply_window_fast(
+    def _apply_window_staged(
         self,
         window: DataFrame,
         present: set,
@@ -429,187 +380,106 @@ class DagApplyJob:
         ns: str,
         res: WindowResult,
         typed: dict[str, DataFrame],
-        gate_buckets: dict[str, list[int]] | None = None,
+        gate_buckets: dict[str, list[int]],
     ) -> bool:
-        """SCHEMA-free MOR window: stage concurrently, commit in FK order.
+        """SCHEMA-free window: stage every present table concurrently,
+        gate, commit in FK order.
 
-        Each present table's validate → normalize → dedup → delta stage
-        write (the distributed jobs) runs in its own driver thread — the
-        stage writes are independent (distinct tables, distinct staging
-        dirs, invisible until commit), so overlapping them collapses the
-        window's fixed per-job cost from sum(tables) to ~max(tables).
-        Commits are driver-side metadata writes and run SEQUENTIALLY in
-        topological order, preserving the contract that a crash state
-        never shows a child ahead of its parent.
-
-        Fence parity with the sequential path: the merge fence id is
-        ``batch_id * 1024 + 0`` — exactly ``apply_batch``'s composite id
-        for a window with no schema epochs — so a window applied fast and
-        replayed sequentially (or vice versa) still fences to a no-op.
-        Reject counting rides the stage job as an Observation; dead-letter
-        partitions are written BEFORE each table's commit and lineage just
-        after it (both idempotent per-batch overwrites; a fenced replay
-        backfills any lineage partition lost to a crash between commit and
-        write — see :meth:`_audit_backfill`).
+        Each table's :meth:`CDCApplyJob.stage` (validate → normalize →
+        dedup → delta stage write, the distributed jobs) runs in its own
+        driver thread — the stage writes are independent (distinct tables,
+        distinct staging dirs, invisible until commit), so overlapping
+        them collapses the window's fixed per-job cost from sum(tables) to
+        ~max(tables). :meth:`CDCApplyJob.commit` is driver-side metadata
+        plus the audit writes and runs SEQUENTIALLY in topological order,
+        preserving the contract that a crash state never shows a child
+        ahead of its parent. Fences, audit sinks and crash replays are the
+        job's own, identical to ``apply_batch`` on a one-epoch batch.
 
         With ``gate='pre'`` the FK gate runs HERE, between staging and
-        the commits, against synthetic snapshots (current state + staged
-        groups — the would-be published state): a violating window never
-        commits (halt raises; record quarantines the window and
-        advances). Returns True when the gate already ran (so
-        ``apply_window`` must not gate again)."""
-        fid = batch_id * 1024
-        work: list[tuple] = []
-        for name in self.order:
-            if name not in present:
-                continue
-            job = self.jobs[name]
-            snap = job.table.snapshot()
+        the commits, against each staged merge's would-be snapshot: a
+        violating window never commits (halt raises; record quarantines
+        the window and advances). Returns True when the gate already ran
+        (so ``apply_window`` must not gate again)."""
+        names = [name for name in self.order if name in present]
+        for name in names:
             typed[name] = MultiTableLog.for_table(
                 window, name, self._parse_schema(name, [])
             )
-            n_events = sum(n for (t, _op), n in ops.items() if t == name)
-            fence_key = f"last_batch_id.{ns}.{name}"
-            fence = snap["properties"].get(fence_key)
-            if fence is not None and fid <= fence:
-                stats = MergeStats(fid, snap["version"], 0, 0, 0, fenced=True)
-                # the original attempt may have crashed between its commit
-                # and its after-commit lineage write (dead-letter writes
-                # pre-commit, but lineage needs the commit version) —
-                # rewrite any missing per-batch audit partition from the
-                # replayed window; one extra job only on crash replay
-                self._audit_backfill(job, typed[name], batch_id, stats)
-                # real reject count from the dead-letter partition's
-                # parquet footers (driver-side, no job): hardcoding 0 on
-                # a fenced replay undercounted monitoring on exactly the
-                # crash-recovery runs an operator scrutinizes (review
-                # finding); without a dead-letter sink there is no record
-                # to recover and 0 stands
-                n_rej = _dl_partition_rows(job.dead_letter_dir, batch_id)
-                res.tables[name] = BatchResult(batch_id, n_events, n_rej, stats, 0, 0)
-                continue
-            work.append((name, job, snap, fence_key, n_events))
-        if not work:
-            return False
-
-        staged: dict[str, dict | None] = {}
-        valids: dict[str, DataFrame] = {}
-        rejects: dict[str, DataFrame] = {}
-        n_rej: dict[str, int] = {}
-        walls: dict[str, float] = {}
+        staged: dict[str, StagedBatch] = {}
         errors: dict[str, BaseException] = {}
         sem = threading.Semaphore(_MAX_STAGE_THREADS)
 
-        def _stage(name: str, job: CDCApplyJob, snap: dict) -> None:
-            t0 = time.monotonic()
-            data = typed[name]
-            rules = validation_rules(job.merge_mode, job.keys, job._payload_cols(data))
-            obs = Observation()
-            observed = data.observe(
-                obs, F.sum((~valid_predicate(rules)).cast("long")).alias("n_rejects")
-            )
-            valid, rej = validate_split(observed, rules, cache=False)
-            normalized = job._normalize(valid)
-            coalesce = job.merge_mode == "coalesce"
-            deduped = (
-                dedup_coalesce(normalized, job.keys, "lsn", "op")
-                if coalesce
-                else dedup_max_seq(normalized, job.keys, "lsn")
-            )
-            source = job.table._align_source_types(deduped, snap)
-            staged[name] = job.table._mor_stage(source, snap, "lsn", "op", coalesce)
-            n_rej[name] = int(obs.get["n_rejects"] or 0)
-            valids[name], rejects[name] = valid, rej
-            walls[name] = time.monotonic() - t0
-
-        def _run(name, job, snap, _fence_key, _n_events):
+        def run(name: str) -> None:
+            n_events = sum(n for (t, _op), n in ops.items() if t == name)
             with sem:
                 try:
-                    _stage(name, job, snap)
+                    staged[name] = self.jobs[name].stage(
+                        typed[name], batch_id, n_events, fence_writer=f"{ns}.{name}"
+                    )
                 except BaseException as e:  # surfaced after join()
                     errors[name] = e
 
-        threads = [threading.Thread(target=_run, args=w, daemon=True) for w in work]
-        for t in threads:
-            t.start()
-        for t in threads:
-            t.join()
-        if errors:
-            # staged files of the non-failing tables become orphans —
-            # age-thresholded vacuum reclaims them, and the window replays
-            name, exc = next(iter(errors.items()))
-            raise RuntimeError(f"stage failed for table {name!r}") from exc
+        threads = [threading.Thread(target=run, args=(n,), daemon=True) for n in names]
+        try:
+            for t in threads:
+                t.start()
+            for t in threads:
+                t.join()
+            if errors:
+                # staged files of the non-failing tables become orphans —
+                # age-thresholded vacuum reclaims them, and the window replays
+                name, exc = next(iter(errors.items()))
+                raise RuntimeError(f"stage failed for table {name!r}") from exc
 
-        gated = False
-        if self.gate == "pre" and self.fk_check:
-            # WAP semantics: gate the WOULD-BE state (current snapshot +
-            # staged groups, exactly what the commits publish) BEFORE any
-            # commit. On violation nothing was published: halt raises the
-            # window away (staged files -> age-guarded vacuum), record
-            # quarantines it (skipped wholesale, violation on the result).
-            gated = True
-            synthetic: dict[str, dict] = {}
-            pre_buckets: dict[str, list[int]] = {}
-            for name, job, snap, _fk, _ne in work:
-                st = staged.get(name)
-                if st is None:
-                    continue
-                synth = job.table.snapshot()
-                synth["file_groups"] = synth["file_groups"] + [
-                    dict(g, seq=synth["version"] + 1) for g in st["groups"]
-                ]
-                synthetic[name] = synth
-                if synth["num_buckets"] == st["nb"]:
-                    pre_buckets[name] = sorted({g["bucket"] for g in st["groups"]})
-            g0 = time.monotonic()
-            try:
-                self._check_window(typed, ops, pre_buckets, synthetic)
-                res.gate_ms = (time.monotonic() - g0) * 1000
-            except FKViolation as exc:
-                res.gate_ms = (time.monotonic() - g0) * 1000
-                if self.on_violation == "halt":
-                    raise
-                res.violations.append(str(exc))
-                for name, job, snap, fence_key, n_events in work:
-                    # quarantined: nothing committed, nothing fenced — the
-                    # result row says so (merge=None)
-                    res.tables[name] = BatchResult(
-                        batch_id, n_events, n_rej.get(name, 0), None, 0,
-                        int(walls.get(name, 0.0) * 1000),
-                    )
-                self._record_quarantine(res)
-                return gated
-
-        for name, job, snap, fence_key, n_events in work:
-            t0 = time.monotonic()
-            st = staged.get(name)
-            # dead-letter lands BEFORE the commit: written after, a crash
-            # between commit and write lost the window's rejects forever —
-            # the replay fences the table out above and never re-stages
-            # (review finding). Pre-commit, a replay simply overwrites the
-            # same batch_id=<fid> partition with identical content.
-            if n_rej[name] and job.dead_letter_dir:
-                job._write_dead_letter(rejects[name], batch_id)
-            if st is None:  # empty after validation: skip commit AND fence
-                stats = MergeStats(fid, job.table.snapshot()["version"], 0, 0, 0)
-            else:
-                stats = job.table._mor_commit(st, fid, None, fence_key)
-                if (
-                    gate_buckets is not None
-                    and job.table.snapshot()["num_buckets"] == st["nb"]
-                ):
-                    # the staged buckets ARE the buckets the window's keys
-                    # hash to — the FK gate prunes its child probe to them
-                    # (skipped when a racing rebucket restaged the commit:
-                    # the stage-time bucket list would be the old layout)
-                    gate_buckets[name] = sorted({g["bucket"] for g in st["groups"]})
-            wall_ms = int((walls[name] + time.monotonic() - t0) * 1000)
-            if job.lineage_dir:
-                job._write_lineage(valids[name], batch_id, stats, wall_ms)
-            res.tables[name] = BatchResult(
-                batch_id, n_events, n_rej[name], stats, 0, wall_ms
+            # a fully replayed window has nothing staged: it gates post-commit
+            pre = self.gate == "pre" and self.fk_check and any(
+                st.replayed is None for st in staged.values()
             )
-        return gated
+            if pre:
+                # WAP semantics: gate the WOULD-BE state (each staged
+                # merge's snapshot plus its groups, exactly what the
+                # commits publish) BEFORE any commit. On violation nothing
+                # was published: halt raises the window away (staged files
+                # -> age-guarded vacuum), record quarantines it (skipped
+                # wholesale, violation on the result).
+                merges = {n: st.merge for n, st in staged.items() if st.merge is not None}
+                g0 = time.monotonic()
+                try:
+                    self._check_window(
+                        typed,
+                        ops,
+                        {n: m.buckets for n, m in merges.items()},
+                        {n: m.snapshot() for n, m in merges.items()},
+                    )
+                except FKViolation as exc:
+                    if self.on_violation == "halt":
+                        raise
+                    res.violations.append(str(exc))
+                    for name, st in staged.items():
+                        # quarantined: nothing committed, nothing fenced —
+                        # the result row says so (merge=None)
+                        res.tables[name] = st.replayed or BatchResult(
+                            batch_id, st.n_events, st.n_rejects, None, 0,
+                            int(st.stage_s * 1000),
+                        )
+                    self._record_quarantine(res)
+                    return True
+                finally:
+                    res.gate_ms = (time.monotonic() - g0) * 1000
+
+            for name in names:
+                st = staged[name]
+                res.tables[name] = self.jobs[name].commit(st)
+                if st.merge is not None:
+                    # the committed buckets ARE the buckets the window's
+                    # keys hash to — the FK gate prunes its child probe
+                    # to them
+                    gate_buckets[name] = st.merge.buckets
+            return pre
+        finally:
+            for st in staged.values():
+                st.release()
 
     def _check_window(
         self,

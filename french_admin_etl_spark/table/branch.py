@@ -45,6 +45,8 @@ from french_admin_etl_spark.table.lake_table import (
     CommitConflict,
     LakeTable,
     MergeStats,
+    fence_key,
+    is_fenced,
 )
 
 
@@ -108,38 +110,31 @@ class Branch:
         see the inline note below for how sequences that continue main's
         get parent-aware fencing."""
         state = self._state()
-        fence_key = "last_batch_id" if writer_id is None else f"last_batch_id.{writer_id}"
-        if batch_id is not None:
-            # BRANCH-SCOPED fence by design: a branch owns its batch-id
-            # sequence, and its fences move to main (max-folded) only at
-            # publish. A caller whose sequence CONTINUES main's — the
-            # WAP driver flow — gets parent-aware fencing for free by
-            # driving CDCApplyJob at the branch (apply_batch checks
-            # snapshot()["properties"], and Branch.snapshot() overlays
-            # the pinned parent's fences); a direct Branch.merge caller
-            # sharing main's namespace across both sinks must pass a
-            # distinct writer_id, same as two log partitions on main.
-            fence = state["properties"].get(fence_key)
-            if fence is not None and batch_id <= fence:
-                return MergeStats(batch_id, state["parent_version"], 0, 0, 0, fenced=True)
+        # BRANCH-SCOPED fence by design: a branch owns its batch-id
+        # sequence, and its fences move to main (max-folded) only at
+        # publish. A caller whose sequence CONTINUES main's — the WAP
+        # driver flow — gets parent-aware fencing for free by driving
+        # CDCApplyJob at the branch (apply_batch checks
+        # snapshot()["properties"], and Branch.snapshot() overlays the
+        # pinned parent's fences); a direct Branch.merge caller sharing
+        # main's namespace across both sinks must pass a distinct
+        # writer_id, same as two log partitions on main.
+        if is_fenced(state["properties"], batch_id, writer_id):
+            return MergeStats(batch_id, state["parent_version"], 0, 0, 0, fenced=True)
         parent = self.table.snapshot(state["parent_version"])
+        coalesce = mode == "coalesce"
         source = self.table._align_source_types(source, parent)
-        delta, obs = self.table._build_mor_delta(
-            source, parent, seq_col, op_col, coalesce=(mode == "coalesce")
-        )
-        groups = self.table._stage_write(delta, parent["schema_version"])
+        delta, obs = self.table._build_mor_delta(source, parent, seq_col, op_col, coalesce)
+        groups = self.table._stage_groups(delta, parent["schema_version"], coalesce)
         if not groups:
             return MergeStats(batch_id, state["parent_version"], 0, 0, 0)
         got = obs.get
         for g in groups:
-            g["delta"] = True
             g["sub"] = state["commits"] + 1  # intra-branch commit order
-            if mode == "coalesce":
-                g["coalesce"] = True
         state["file_groups"].extend(groups)
         state["commits"] += 1
         if batch_id is not None:
-            state["properties"][fence_key] = batch_id
+            state["properties"][fence_key(writer_id)] = batch_id
         self._save(state)
         return MergeStats(
             batch_id,

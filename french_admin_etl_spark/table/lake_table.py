@@ -110,6 +110,52 @@ class MergeStats:
     lineage: list[dict] = field(default_factory=list)
 
 
+@dataclass
+class StagedMerge:
+    """A merge between its two phases (:meth:`LakeTable.stage_merge`,
+    :meth:`LakeTable.commit_merge`): delta file groups already written
+    under ``data/`` but in no snapshot, so no reader sees them until the
+    commit (or ``vacuum_orphans`` reclaims them). After the commit,
+    ``groups`` are the ones committed: a rebucket racing the commit
+    restages them under its layout."""
+
+    groups: list[dict]
+    delta: DataFrame  # the shaped delta plan, restaged on a layout change
+    base: dict  # the snapshot the groups were staged against
+    coalesce: bool
+    upserts: int
+    deletes: int
+
+    @property
+    def buckets(self) -> list[int]:
+        return sorted({g["bucket"] for g in self.groups})
+
+    def snapshot(self) -> dict:
+        """``base`` plus the staged groups: the state the commit would
+        publish if no other commit lands first."""
+        snap = dict(self.base)
+        snap["file_groups"] = self.base["file_groups"] + [
+            dict(g, seq=self.base["version"] + 1) for g in self.groups
+        ]
+        return snap
+
+
+def fence_key(writer_id: str | None) -> str:
+    """The snapshot property holding a writer's exactly-once fence (the
+    highest batch id it committed); ``None`` is the shared fence."""
+    return "last_batch_id" if writer_id is None else f"last_batch_id.{writer_id}"
+
+
+def is_fenced(properties: dict, batch_id: int | None, writer_id: str | None) -> bool:
+    """True when ``properties`` (a snapshot's, or a branch's own) carry
+    this writer's fence at or past ``batch_id``: the batch already
+    committed and replaying it must be a no-op."""
+    if batch_id is None:
+        return False
+    fence = properties.get(fence_key(writer_id))
+    return fence is not None and batch_id <= fence
+
+
 def _bucket_expr(keys: list[str], num_buckets: int):
     return F.pmod(F.xxhash64(*[F.col(k) for k in keys]), F.lit(num_buckets)).cast("int")
 
@@ -1204,54 +1250,73 @@ class LakeTable:
         ``operators.dedup.dedup_coalesce`` (one row per key, each column
         already last-non-null within the batch).
 
-        ``writer_id`` namespaces the exactly-once fence: each writer (e.g.
-        one per log partition in a multi-writer topology) gets its own
-        ``last_batch_id.<writer_id>`` property, so independent batch-id
-        sequences never fence each other out. With ``writer_id=None`` the
-        fence is the shared ``last_batch_id`` (single-writer-sequence).
+        Two-phase: :meth:`stage_merge` writes the delta file groups and
+        :meth:`commit_merge` publishes them under the fence — split so a
+        multi-table driver (``streaming.dag``) can stage several tables
+        concurrently and still commit them in FK order.
+
+        ``writer_id`` namespaces the exactly-once fence (see
+        :func:`fence_key`): each writer (e.g. one per log partition in a
+        multi-writer topology) gets its own fence property, so independent
+        batch-id sequences never fence each other out. With
+        ``writer_id=None`` the fence is shared (single-writer-sequence).
         """
         snap = self.snapshot()
+        if is_fenced(snap["properties"], batch_id, writer_id):
+            return MergeStats(batch_id, snap["version"], 0, 0, 0, fenced=True)
+        staged = self._stage_merge(source, snap, seq_col, op_col, mode)
+        if staged is None:
+            return MergeStats(batch_id, snap["version"], 0, 0, 0)
+        return self.commit_merge(staged, batch_id, writer_id, extra_properties)
+
+    def stage_merge(
+        self,
+        source: DataFrame,
+        seq_col: str = "lsn",
+        op_col: str = "op",
+        mode: str = "overwrite",
+    ) -> StagedMerge | None:
+        """Phase one of :meth:`merge`: shape the (pre-deduped) source into
+        delta rows and write them as file groups, with no commit. Returns
+        ``None`` for an empty source. Stage order between tables is free —
+        staged files are invisible until :meth:`commit_merge`."""
+        return self._stage_merge(source, self.snapshot(), seq_col, op_col, mode)
+
+    def _stage_merge(
+        self, source: DataFrame, snap: dict, seq_col: str, op_col: str, mode: str
+    ) -> StagedMerge | None:
+        # merge() stages against the snapshot its fence check already read
         if snap["properties"].get("resolution") == "additive":
             raise ValueError(
                 "additive tables take increments, not row states — use merge_add()"
             )
-        fence_key = "last_batch_id" if writer_id is None else f"last_batch_id.{writer_id}"
-
-        if batch_id is not None:
-            fence = snap["properties"].get(fence_key)
-            if fence is not None and batch_id <= fence:
-                return MergeStats(batch_id, snap["version"], 0, 0, 0, fenced=True)
-
+        coalesce = mode == "coalesce"
         source = self._align_source_types(source, snap)
-        staged = self._mor_stage(source, snap, seq_col, op_col, coalesce=(mode == "coalesce"))
-        if staged is None:
-            return MergeStats(batch_id, snap["version"], 0, 0, 0)
-        return self._mor_commit(staged, batch_id, extra_properties, fence_key)
+        delta, obs = self._build_mor_delta(source, snap, seq_col, op_col, coalesce)
+        groups = self._stage_groups(delta, snap["schema_version"], coalesce)
+        if not groups:
+            # Empty slice (the COMMON case for the per-table windows of a
+            # multi-table DAG): nothing staged, so the caller skips the
+            # commit AND the fence advance — a replay re-applies the same
+            # empty slice, preserving exactly-once without a metadata-only
+            # snapshot per empty window. obs.get must not be read here:
+            # Catalyst can fold an all-empty source (e.g. the coalesce
+            # barrier union of two empties) to a LocalRelation, dropping
+            # the CollectMetrics node the Observation waits on.
+            return None
+        got = obs.get
+        return StagedMerge(
+            groups, delta, snap, coalesce, int(got["upserts"] or 0), int(got["deletes"] or 0)
+        )
 
-    def _restage_on_layout_change(
-        self, snap: dict, nb: int, delta: DataFrame, keys: list[str], sv: int,
-        coalesce: bool = False,
-    ):
-        """Rebase-loop guard shared by the MOR delta append and the
-        additive append: if a concurrent ``rebucket()`` changed the
-        partition layout between stage and commit, the staged files
-        route rows by the OLD hash — appending them under the new
-        snapshot would put keys in buckets reads never look in. Restage
-        under the new count (O(batch); the delta plan is still in hand).
-        The first stage's files become orphans for ``vacuum_orphans``.
-        Returns ``(nb, delta, groups)`` with ``groups=None`` when the
-        layout is unchanged — ONE implementation so future hardening of
-        the guard cannot drift between the two retry loops."""
-        if snap["num_buckets"] == nb:
-            return nb, delta, None
-        nb = snap["num_buckets"]
-        delta = delta.withColumn("_bucket", _bucket_expr(keys, nb))
+    def _stage_groups(self, delta: DataFrame, sv: int, coalesce: bool) -> list[dict]:
+        """Write a delta plan (carrying ``_bucket``) as delta file groups."""
         groups = self._stage_write(delta, sv)
         for g in groups:
             g["delta"] = True
             if coalesce:
                 g["coalesce"] = True
-        return nb, delta, groups
+        return groups
 
     def _align_source_types(self, source: DataFrame, snap: dict) -> DataFrame:
         """Align source column types to the snapshot's schema. A caller
@@ -1323,54 +1388,17 @@ class LakeTable:
             delta = delta.unionByName(barriers)
         return delta.withColumn("_bucket", _bucket_expr(keys, nb)), obs
 
-    def _mor_stage(
-        self, source: DataFrame, snap: dict, seq_col: str, op_col: str, coalesce: bool
-    ) -> dict | None:
-        """Stage half of the MOR merge: shape + write the delta file
-        groups, no commit. Returns None for an empty slice, else a staged
-        dict for :meth:`_mor_commit`. Split out so a multi-table driver
-        (``streaming.dag``) can run several tables' stage writes — the
-        expensive distributed jobs — CONCURRENTLY, while still committing
-        sequentially in FK order (stage order is free: staged files are
-        invisible until their commit)."""
-        keys, nb, sv = snap["key_cols"], snap["num_buckets"], snap["schema_version"]
-        delta, obs = self._build_mor_delta(source, snap, seq_col, op_col, coalesce)
-        groups = self._stage_write(delta, sv)
-        if not groups:
-            # Empty epoch slice (the COMMON case for the per-table windows
-            # of a multi-table DAG): nothing staged, so skip the commit AND
-            # the fence advance — a replay re-applies the same empty slice,
-            # preserving exactly-once without a metadata-only snapshot per
-            # empty window. obs.get must not be read here: Catalyst can
-            # fold an all-empty source (e.g. the coalesce barrier union of
-            # two empties) to a LocalRelation, dropping the CollectMetrics
-            # node the Observation waits on.
-            return None
-        got = obs.get
-        for g in groups:
-            g["delta"] = True
-            if coalesce:
-                g["coalesce"] = True
-        return {
-            "groups": groups,
-            "delta": delta,
-            "keys": keys,
-            "nb": nb,
-            "sv": sv,
-            "coalesce": coalesce,
-            "upserts": int(got["upserts"] or 0),
-            "deletes": int(got["deletes"] or 0),
-        }
-
-    def _mor_commit(
+    def commit_merge(
         self,
-        staged: dict,
-        batch_id: int | None,
-        extra_properties: dict | None,
-        fence_key: str = "last_batch_id",
+        staged: StagedMerge,
+        batch_id: int | None = None,
+        writer_id: str | None = None,
+        extra_properties: dict | None = None,
     ) -> MergeStats:
-        """Commit half of the MOR merge (driver-only except a rebucket
-        restage): fenced, bounded-retry rebase onto the newest snapshot.
+        """Phase two of :meth:`merge`: publish staged file groups under the
+        writer's fence (a batch the fence already covers comes back
+        ``fenced`` and publishes nothing). Driver-only except a rebucket
+        restage.
 
         Commit with bounded retry: a MOR delta append is independent of
         target state (no bucket was read), so on CommitConflict we simply
@@ -1380,25 +1408,27 @@ class LakeTable:
         sequence, so each must pass a distinct ``writer_id`` (per-writer
         fence property) — a shared scalar fence would treat writer B's
         fresh batch as writer A's replay and silently drop it."""
-        groups, delta = staged["groups"], staged["delta"]
-        keys, nb, sv, coalesce = staged["keys"], staged["nb"], staged["sv"], staged["coalesce"]
+        delta, base = staged.delta, staged.base
+        keys, sv = base["key_cols"], base["schema_version"]
         # file groups staged per bucket count: an attempt whose layout was
         # already staged reuses it. Restaging is a Spark job, so a
         # maintenance loop that rebuckets (8→2→4→8…) faster than one
         # restage would otherwise win every race and starve the writer.
-        staged_by_nb = {nb: groups}
+        staged_by_nb = {base["num_buckets"]: staged.groups}
         for attempt in range(10):
             snap = self.snapshot()
-            if batch_id is not None:
-                fence = snap["properties"].get(fence_key)
-                if fence is not None and batch_id <= fence:
-                    return MergeStats(batch_id, snap["version"], 0, 0, 0, fenced=True)
-            if snap["num_buckets"] not in staged_by_nb:
-                nb, delta, groups = self._restage_on_layout_change(
-                    snap, nb, delta, keys, sv, coalesce
-                )
-                staged_by_nb[nb] = groups
+            if is_fenced(snap["properties"], batch_id, writer_id):
+                return MergeStats(batch_id, snap["version"], 0, 0, 0, fenced=True)
             nb = snap["num_buckets"]
+            if nb not in staged_by_nb:
+                # a concurrent rebucket() changed the layout between stage
+                # and commit: the staged files route rows by the OLD hash,
+                # and appending them would put keys in buckets reads never
+                # look in. Restage under the new count (O(batch); the delta
+                # plan is still in hand); the first stage's files become
+                # orphans for vacuum_orphans.
+                delta = delta.withColumn("_bucket", _bucket_expr(keys, nb))
+                staged_by_nb[nb] = self._stage_groups(delta, sv, staged.coalesce)
             groups = staged_by_nb[nb]
             # commit seq = the version this attempt will commit as; the read
             # path uses it to break equal-LSN ties by commit order
@@ -1407,7 +1437,7 @@ class LakeTable:
             new_groups = sorted(snap["file_groups"] + groups, key=lambda g: g["bucket"])
             props = dict(snap["properties"])
             if batch_id is not None:
-                props[fence_key] = batch_id
+                props[fence_key(writer_id)] = batch_id
             for k, v in (extra_properties or {}).items():
                 props[k] = v
             # parsed from the props this attempt publishes, BEFORE the
@@ -1426,12 +1456,9 @@ class LakeTable:
             except CommitConflict:
                 if attempt == 9:
                     raise
+        staged.groups = groups
         stats = MergeStats(
-            batch_id,
-            new["version"],
-            staged["upserts"],
-            staged["deletes"],
-            len(groups),
+            batch_id, new["version"], staged.upserts, staged.deletes, len(groups)
         )
         # auto-compaction: fold deltas into the base for any bucket past the
         # threshold (a maintenance commit, separate from the fenced commit —
@@ -1483,8 +1510,9 @@ class LakeTable:
                 'merge_add() needs an additive table (create with properties '
                 '{"resolution": "additive"}); row-state tables use merge()'
             )
+        if is_fenced(snap["properties"], batch_id, writer_id):
+            return MergeStats(batch_id, snap["version"], 0, 0, 0, fenced=True)
         keys, nb, sv = snap["key_cols"], snap["num_buckets"], snap["schema_version"]
-        fence_key = "last_batch_id" if writer_id is None else f"last_batch_id.{writer_id}"
         phys = self._schema_at(snap, sv)
         logical = [f["name"] for f in snap["schemas"][str(sv)]["fields"]]
         data_cols = [c for c in logical if c not in keys]
@@ -1514,27 +1542,13 @@ class LakeTable:
             .withColumn("_deleted", F.lit(False))
             .withColumn("_bucket", _bucket_expr(keys, nb))
         )
-        groups = self._stage_write(delta, sv)
+        groups = self._stage_groups(delta, sv, coalesce=False)
         if not groups:
             return MergeStats(batch_id, snap["version"], 0, 0, 0)
         rows = sum(g["rows"] for g in groups)
-        for g in groups:
-            g["delta"] = True
-        # ONE fenced rebase-retry + auto-compaction implementation
-        # (_mor_commit): this path previously copy-pasted the whole
-        # ~40-line loop, the exact drift _restage_on_layout_change was
-        # extracted to prevent (review finding)
-        staged = {
-            "groups": groups,
-            "delta": delta,
-            "keys": keys,
-            "nb": nb,
-            "sv": sv,
-            "coalesce": False,
-            "upserts": rows,
-            "deletes": 0,
-        }
-        return self._mor_commit(staged, batch_id, extra_properties, fence_key)
+        # the one fenced rebase-retry + auto-compaction implementation
+        staged = StagedMerge(groups, delta, snap, False, rows, 0)
+        return self.commit_merge(staged, batch_id, writer_id, extra_properties)
 
     def delete_where(
         self,
@@ -1836,7 +1850,7 @@ class LakeTable:
           NEW bucket, which is where a post-rebucket merge routes them.
         - **Concurrent writers** are safe: a writer that staged its
           delta under the old count detects the layout change on rebase
-          and restages (see ``_mor_commit``); the orphaned first-stage
+          and restages (see ``commit_merge``); the orphaned first-stage
           files are reclaimed by ``vacuum_orphans``. ``rebucket`` itself
           never retries — racing it against
           another full-rewrite maintenance pass is a scheduler bug and

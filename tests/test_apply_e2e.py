@@ -557,6 +557,21 @@ def test_audit_sinks_idempotent_across_replay(spark, tmp_root):
     assert spark.read.parquet(lin).count() == lin1
     assert _sha_state(table) == state1
 
+    # a crash between the commit and the lineage write: the fenced replay
+    # restores the lost partition without restaging, keeps the table
+    # version and the dead-letter rows, and reads the reject count from
+    # the dead-letter partition
+    import shutil
+
+    v1 = table.current_version()
+    shutil.rmtree(os.path.join(lin, "batch_id=0"))
+    res3 = job.apply_batch(ev, batch_id=0)
+    assert res3.merge.fenced and res3.n_rejects == 1
+    assert os.path.isdir(os.path.join(lin, "batch_id=0"))
+    assert spark.read.parquet(lin).count() == lin1
+    assert sorted(r["_reject_reason"] for r in spark.read.parquet(dead).collect()) == dl1
+    assert table.current_version() == v1
+
 
 def test_checkpoint_store_bare_filename(tmp_root, monkeypatch):
     """Review finding: a checkpoint path with no directory component

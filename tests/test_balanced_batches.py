@@ -152,7 +152,7 @@ def test_schema_epoch_fence_overflow_raises(spark, tmp_root):
     job = CDCApplyJob(spark, table)
     df = spark.createDataFrame([], EVENT_SCHEMA)
     with pytest.raises(ValueError, match="fence ids would collide"):
-        job._merge_epoch(df, batch_id=0, sub=1024, prev=None)
+        job._merge_epoch(df, batch_id=0, sub=1024, fence_writer=None)
 
 
 def test_driver_checkpoint_shapes_are_guarded(spark, tmp_root):

@@ -611,13 +611,13 @@ def test_dag_fast_and_sequential_paths_fence_each_other(spark, tmp_root, cog_eve
 
     def fast_windows(d):
         ids = []
-        fast = d._apply_window_fast
+        fast = d._apply_window_staged
 
         def spy(window, present, ops, batch_id, *args):
             ids.append(batch_id)
             return fast(window, present, ops, batch_id, *args)
 
-        d._apply_window_fast = spy
+        d._apply_window_staged = spy
         return ids
 
     n = log.max_lsn() + 1
@@ -691,6 +691,42 @@ def test_dag_pre_gate_halt_never_publishes_poison_window(spark, tmp_root):
     # nothing fenced either: after fixing upstream, a rerun applies fresh
     with pytest.raises(FKViolation):  # poison still poisons, loudly
         dag.run_incremental(log, ckpt, batch_lsns=100)
+
+
+def test_dag_coalesce_pre_gate_releases_staged_sources(spark, tmp_root):
+    """Coalesce tables persist their deduped merge source while it is
+    staged. A clean window releases it on commit, and a poison window
+    that halts the pre-commit gate releases it too: no persisted frame
+    outlives a window."""
+    ev = _envelope(
+        [
+            ("I", "region", {"code": "REG00", "name": "R"}),
+            ("I", "department", {"code": "D000", "region_code": "REG00", "name": "D"}),
+            ("I", "commune", {"code": "C1", "department_code": "D000", "name": "X", "population": 1}),
+            ("I", "commune", {"code": "C2", "department_code": "D999", "name": "Y", "population": 2}),
+        ]
+    )
+    log = _write_log(spark, tmp_root, ev)
+    jobs = {}
+    for name, schema in (("region", REGION), ("department", DEPARTMENT), ("commune", COMMUNE)):
+        t = LakeTable.create(
+            spark, os.path.join(tmp_root, name), schema, ["code"], num_buckets=4
+        )
+        jobs[name] = CDCApplyJob(spark, t, merge_mode="coalesce")
+    dag = DagApplyJob(jobs, EDGES, writer_id="dag", gate="pre", on_violation="halt")
+    ckpt = CheckpointStore(os.path.join(tmp_root, "c.json"))
+
+    def persisted():
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    n0 = persisted()
+    dag.run_incremental(log, ckpt, batch_lsns=3, max_batches=1)  # clean window
+    assert jobs["department"].table.read().count() == 1
+    assert persisted() == n0
+    with pytest.raises(FKViolation, match="D999"):
+        dag.run_incremental(log, ckpt, batch_lsns=3)  # poison window halts
+    assert jobs["commune"].table.read().count() == 0
+    assert persisted() == n0
 
 
 def test_dag_pre_gate_record_quarantines_window(spark, tmp_root):

@@ -116,3 +116,68 @@ def test_perfbench_traced_methods_exist():
         if meth not in methods:
             missing.append(f"{mod}.{cls_name}.{meth}")
     assert missing == [], missing
+
+
+def _private_methods(path: pathlib.Path, cls_name: str) -> set[str]:
+    tree = ast.parse(path.read_text())
+    return {
+        fn.name
+        for cls in tree.body
+        if isinstance(cls, ast.ClassDef) and cls.name == cls_name
+        for fn in cls.body
+        if isinstance(fn, ast.FunctionDef)
+        and fn.name.startswith("_")
+        and not fn.name.startswith("__")
+    }
+
+
+def _foreign_uses(tree: ast.AST, names: set[str]) -> list[tuple[int, str]]:
+    """``x.<name>`` for ``name`` in ``names`` where ``x`` is not ``self``."""
+    return [
+        (node.lineno, node.attr)
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Attribute)
+        and node.attr in names
+        and not (isinstance(node.value, ast.Name) and node.value.id == "self")
+    ]
+
+
+def test_table_internals_stay_in_the_table_package():
+    """Writers reach a ``LakeTable`` through its public surface
+    (``merge``, ``stage_merge``/``commit_merge``, ``is_fenced``...): a
+    driver that calls the table's private staging or commit steps is a
+    second copy of the write path that drifts from the first. Only
+    ``table/`` may use them."""
+    private = _private_methods(PKG / "table" / "lake_table.py", "LakeTable")
+    assert private
+    offenders = [
+        f"{path.relative_to(PKG.parent)}:{line}: {attr}"
+        for path in sorted(PKG.rglob("*.py"))
+        if (PKG / "table") not in path.parents
+        for line, attr in _foreign_uses(ast.parse(path.read_text()), private)
+    ]
+    assert offenders == [], offenders
+
+
+def test_dag_runs_the_per_table_pipeline_through_public_steps():
+    """``DagApplyJob`` applies each table through ``CDCApplyJob``'s public
+    steps (``apply_batch``, ``stage``, ``commit``) and reimplements none
+    of its private ones."""
+    private = _private_methods(PKG / "streaming" / "apply.py", "CDCApplyJob")
+    assert private
+    dag = ast.parse((PKG / "streaming" / "dag.py").read_text())
+    cls = next(
+        n for n in dag.body if isinstance(n, ast.ClassDef) and n.name == "DagApplyJob"
+    )
+    assert _foreign_uses(cls, private) == []
+
+
+def test_fence_property_spelled_only_by_the_table():
+    """The fence property name lives in one place, ``lake_table.py``;
+    every other module asks ``is_fenced``/``fence_key``."""
+    spelled = [
+        str(path.relative_to(PKG))
+        for path in sorted(PKG.rglob("*.py"))
+        if "last_batch_id" in path.read_text()
+    ]
+    assert spelled == ["table/lake_table.py"], spelled
